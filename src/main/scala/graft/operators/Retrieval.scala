@@ -163,7 +163,9 @@ object Retrieval {
     // twice per call — but with the in-array filter each pass is cheap,
     // and an A/B of a per-call scratch measured 0.67 -> 1.11 s (the
     // write job costs more than the duplicated pruned scan).
-    val qArr = array(query.map(lit(_)): _*)
+    // typed, not `array(lit…)`: an empty query list would build an
+    // untyped `array()` that array_contains cannot compare to a string
+    val qArr = typedlit(query)
     val tf = docs.select(col("doc_id"),
         explode(filter(T.tokens(col("text")),
           t => array_contains(qArr, t))).as("token"))
@@ -360,50 +362,65 @@ object Retrieval {
     2L -> Seq("sort", "merge"),
     3L -> Seq("stream", "window", "state", "key"))
 
+  /** BM25 IMPACT postings — token → (doc_id, w), memoized per dataset:
+    * `w` is [[termScore]] evaluated once at index-build time over the
+    * postings ⋈ per-token df ⋈ (N, avgdl) ⋈ doc lengths. Every input is
+    * a corpus constant, so a term's per-document contribution is index
+    * state exactly like the postings it is derived from (the impact
+    * form of an inverted index); a serve scans it with the pushed
+    * `token IN (…)` filter and folds — no per-call df aggregate, stats
+    * or doc-length join. The stored double is the round-8 value the
+    * inline expression produced, so folds over it are bit-identical to
+    * [[bm25Tail]]'s. */
+  def bm25Impacts(spark: SparkSession, dir: String): DataFrame =
+    Memo.table(spark, dir, "bm25impacts") {
+      val post = postingsTable(spark, dir)
+      post.join(post.groupBy("token").agg(count(lit(1)).as("df")), "token")
+        .crossJoin(broadcast(bm25Stats(spark, dir)))
+        .join(docLengths(spark, dir), "doc_id")
+        .select(col("token"), col("doc_id"), termScore.as("w"))
+    }
+
   /** Harness query `bm25_batch`: a BATCH of term queries ranked in ONE
     * plan — the production serving shape when queries arrive in bulk:
-    * the postings memo is probed ONCE for the union of all terms (one
-    * pushed-down IN filter), df/doc-length/corpus stats are computed
-    * once and shared, each query's scores ride a query_id column, and
-    * the per-query top-k is a query-partitioned window (never a global
-    * sort). Per-batch cost is O(matching postings for the term union) —
-    * amortizing the index scan across the batch instead of paying one
-    * driver round trip per query. */
+    * the [[bm25Impacts]] memo is probed ONCE for the union of all terms
+    * (one pushed-down IN filter), each matching impact fans out to the
+    * queries holding its term through a literal token → query-ids map
+    * (a narrow map, no join), the per-(query, doc) fold is a hash
+    * aggregate, and the per-query top-k is a query-partitioned window
+    * (never a global sort). The output sort is bounded by the exact row
+    * count |queries|·topK, so it plans as a TakeOrderedAndProject
+    * inside the result job. Per-batch cost is O(matching impacts for
+    * the term union) in three jobs — the scan's shuffle, the fold's
+    * shuffle and the result. */
   def bm25Batch(spark: SparkSession, dir: String,
       batch: Seq[(Long, Seq[String])] = QueryBatch,
       topK: Int = 20): DataFrame = {
-    import spark.implicits._
     // dedup (query_id, term): bm25Search's `isin` dedups repeated
-    // query terms implicitly, and a duplicated pair here would join
-    // every matching posting twice — doubling n_terms and the score
+    // query terms implicitly, and a duplicated pair here would fold
+    // every matching impact twice — doubling n_terms and the score
     // sum, silently breaking the identical-ranking contract
-    val queryTerms = batch
-      .flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
+    val termQueries: Map[String, Seq[Long]] = batch
+      .flatMap { case (qid, ts) => ts.map(_ -> qid) }
       .distinct
-      .toDF("query_id", "token")
-    val allTerms = batch.flatMap(_._2).distinct
-    val post = postingsTable(spark, dir).filter(col("token").isin(allTerms: _*))
-    val dl = docLengths(spark, dir)
-    val stats = bm25Stats(spark, dir) // memoized corpus constants
-    // df is query-independent: compute it BEFORE the query-term join
-    // (a term shared by two queries must not double its df)
-    val dfreq = post.groupBy("token").agg(count(lit(1)).as("df"))
+      .groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2).sorted }
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("doc_id"))
-    post.join(broadcast(queryTerms), "token")
-      .join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .join(dl, "doc_id")
+    val ranked = bm25Impacts(spark, dir)
+      .filter(col("token").isin(termQueries.keys.toSeq.sorted: _*))
+      .select(explode(element_at(typedlit(termQueries), col("token")))
+          .as("query_id"), col("doc_id"), col("w"))
       .groupBy("query_id", "doc_id")
       // decimal fold + decimal round: bm25Tail's tie discipline
       .agg(count(lit(1)).as("n_terms"),
-        sum(termScore.cast("decimal(38,8)")).as("s"))
+        sum(col("w").cast("decimal(38,8)")).as("s"))
       .select(col("query_id"), col("doc_id"), col("n_terms"),
         round(col("s"), 6).cast("double").as("score"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= topK)
       .select("query_id", "rk", "doc_id", "n_terms", "score")
-      .orderBy("query_id", "rk")
+    Similarity.ranked(ranked, "query_id",
+      batch.map(_._1).distinct.size.toLong * topK)
   }
 
   /** Harness query `phrase_from_index`: the same adjacent-token phrase
@@ -477,7 +494,7 @@ object Retrieval {
     * "Reciprocal rank fusion outperforms Condorcet and individual rank
     * learning methods") — the RAG serving shape that tops off the
     * retrieval family. Each query in [[QueryBatch]] runs BOTH serving
-    * paths: BM25 over the materialized postings memo ([[bm25Batch]] —
+    * paths: BM25 over the materialized impact memo ([[bm25Batch]] —
     * one pushed IN probe for the whole batch) and cosine top-k over the
     * persisted IVF assignment
     * ([[graft.operators.Similarity.probedTopKForIds]] — the query id
@@ -487,7 +504,8 @@ object Retrieval {
     * (2·poolK rows per query — aggregate-sized however big the corpus),
     * so the whole query costs what its two index probes cost: at
     * 100 TB both sides remain O(matching postings) / O(probed lists),
-    * and the fusion groupBy never sees corpus-sized data. Ranks fuse at
+    * and the fusion groupBy never sees corpus-sized data; the output
+    * sort is bounded by the exact row count |QueryBatch|·k. Ranks fuse at
     * most TWO addends per (query, doc), so the double sum is
     * order-independent (IEEE addition is commutative; associativity
     * never enters), making the score hash-stable across engines. */
@@ -510,7 +528,7 @@ object Retrieval {
     // (query_id, doc_id) covers the groupBy, and the window partitions
     // by query_id exactly. The repartitioned frame is the two candidate
     // pools (2·poolK rows per query — aggregate-sized at any corpus).
-    lex.unionByName(sem)
+    val fused = lex.unionByName(sem)
       .repartition(col("query_id"))
       .groupBy("query_id", "doc_id")
       .agg(sum(lit(1.0) / (lit(rrfC) + col("rk"))).as("rrf"))
@@ -518,6 +536,7 @@ object Retrieval {
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk"), col("doc_id"),
         round(col("rrf"), 6).as("rrf"))
-      .orderBy("query_id", "rk")
+    Similarity.ranked(fused, "query_id",
+      QueryBatch.map(_._1).distinct.size.toLong * k)
   }
 }

@@ -141,9 +141,7 @@ object Similarity {
     * where a packed layout needs them). */
   private[operators] def seedCentroids(e: DataFrame, c: Int): DataFrame =
     // pure plan (TakeOrdered over the vector scan): no window, no
-    // driver round-trip — seeding runs per call on the UNMEMOIZED
-    // sample-centroid serve, so even a tiny extra job is a measured
-    // per-query cost. Centroid ids stay the seed vectors' OWN ids
+    // driver round-trip. Centroid ids stay the seed vectors' OWN ids
     // (opaque join keys downstream — density is only a PQ packed-
     // layout need, handled by the codebook trainer's own mapping);
     // identical to the old `vec_id < c` rule on 0-based corpora,
@@ -187,12 +185,15 @@ object Similarity {
 
   /** IVF-style ANN with sample centroids (the `NumCentroids` lowest
     * vec_ids) — the untrained baseline, served from the memoized
-    * sample assignment like every other serve path. */
+    * sample assignment like every other serve path, its codebook the
+    * same driver-side artifact the trained serves probe with. */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 10,
       nprobe: Int = 8): DataFrame = {
-    val e = emb(spark, dir)
-    probeTopK(sampleAssignmentTable(spark, dir), queriesOf(e),
-      seedCentroids(e, NumCentroids), k, nprobe)
+    val cents = Memo.artifact(spark, dir, s"cent_lit_sample_$NumCentroids") {
+      centroidArtifact(seedCentroids(emb(spark, dir), NumCentroids))
+    }
+    probeTopK(sampleAssignmentTable(spark, dir), queriesOf(emb(spark, dir)),
+      cents, k, nprobe, NumQueries)
   }
 
   /** IVF over Lloyd-trained spherical k-means centroids, served from
@@ -204,25 +205,23 @@ object Similarity {
       nprobe: Int = 8, iters: Int = 3): DataFrame =
     probeTopK(assignmentTable(spark, dir, iters),
       queriesOf(emb(spark, dir)),
-      trainCentroids(spark, dir, iters = iters), k, nprobe)
+      centroidLiterals(spark, dir, iters), k, nprobe, NumQueries)
 
   /** The standard bounded serving query set of a (vec_id, v, nrm)
-    * frame. */
+    * frame: at most `NumQueries` query ids, vec_id being non-negative by
+    * the corpus contract (as doc_id is). */
   private def queriesOf(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"),
         col("nrm").as("q_nrm"))
 
-  /** The IVF probe tail, shared by the one-shot and incremental paths:
-    * each query ranks its `nprobe` nearest centroids, then scans only
-    * those inverted lists of `assigned` for the exact cosine top-k. */
-  /** Each query's `nprobe` nearest centroids as exploded probe rows —
-    * the ONE definition of probe selection for every bounded-query path
-    * (probeTopK's serve, the at-ingest screen): a top-nprobe window
-    * over |Q|×C rows (both bounded by design — the query set is small,
-    * C fixed), tie-broken (c_cos DESC, c_id) exactly like
-    * [[withProbes]]' literal-codebook form. Factored so a tie-break or
-    * NaN fix can never fork the serve and screening probe sets. */
+  /** Each query's `nprobe` nearest centroids as exploded probe rows
+    * from a centroid FRAME — probe selection for the paths that also
+    * need the query·centroid inner product (Quantize's residual and LUT
+    * serves) or whose query set is an arbitrary batch (the at-ingest
+    * screen): a top-nprobe window over |Q|×C rows, tie-broken
+    * (c_cos DESC, c_id) exactly like [[withProbes]]' literal-codebook
+    * form, so the two can never select different probe sets. */
   private[operators] def probesOf(queries: DataFrame, centroids: DataFrame,
       nprobe: Int): DataFrame = {
     val wProbe = Window.partitionBy("q_id")
@@ -241,19 +240,34 @@ object Similarity {
       .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"), col("qc_ip"))
   }
 
+  /** The bounded-query IVF serve every `sim_topk_*` probe path shares:
+    * each of at most `maxQueries` queries picks its `nprobe` nearest
+    * centroids from the driver-side codebook ([[withProbes]] — a narrow
+    * map, no centroid join, no window), the broadcast probe rows scan
+    * only those inverted lists of `assigned`, and each query keeps its
+    * exact cosine top-k through the bounded-state TopK aggregate
+    * ([[scoreTopK]]; tie-for-tie the (cos DESC, vec_id) window). The
+    * output sort is bounded by the exact row count maxQueries·k, so it
+    * is a TakeOrderedAndProject inside the result job: three jobs per
+    * serve — the probe broadcast, the scan's shuffle, the result. */
   private def probeTopK(assigned: DataFrame, queries: DataFrame,
-      centroids: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val probes = probesOf(queries, centroids, nprobe)
-    // scan only the probed inverted lists
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(probes), "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"), round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rk")
+      cents: Array[(Long, Seq[Double], Double)], k: Int, nprobe: Int,
+      maxQueries: Long): DataFrame =
+    ranked(
+      scoreTopK(assigned, broadcast(withProbes(queries, cents, nprobe)), k)
+        .select(col("q_id"), col("rk"), col("vec_id"),
+          round(col("score"), 6).as("cos")),
+      "q_id", maxQueries * k)
+
+  /** A serve's (query, rk) output order, bounded by `rows`, the exact
+    * upper bound of its row count (|queries|·k): a sort under a limit
+    * plans as a TakeOrderedAndProject inside the result job, where a
+    * bare global sort pays a range-partition sampling job plus an
+    * exchange. */
+  private[operators] def ranked(df: DataFrame, q: String,
+      rows: Long): DataFrame = {
+    val sorted = df.orderBy(col(q), col("rk"))
+    if (rows <= Int.MaxValue) sorted.limit(rows.toInt) else sorted
   }
 
   /** k-NN GRAPH construction — every corpus vector's top-k cosine
@@ -492,20 +506,20 @@ object Similarity {
       .filter(col("nrm") > 0) // same zero-norm exclusion as emb
 
   /** Each query row's `nprobe` nearest centroids as exploded
-    * (q_id, q_v, q_nrm, c_id) rows, with the codebook shipped as
-    * LITERALS — probe selection is a pure narrow map: zero shuffle, no
-    * n×C window. Input must carry (q_id, q_v, q_nrm). */
+    * (q_id, q_v, q_nrm, c_id) rows, with the codebook shipped as ONE
+    * array literal that `transform` scores per query — probe selection
+    * is a pure narrow map: zero shuffle, no n×C window, and one literal
+    * to analyze however large C is (a struct literal per centroid cost
+    * tens of ms of analysis per call). Ties break (c_cos DESC, c_id).
+    * Input must carry (q_id, q_v, q_nrm). */
   private[graft] def withProbes(queries: DataFrame,
       cents: Array[(Long, Seq[Double], Double)], nprobe: Int): DataFrame = {
-    val cand = cents.map { case (cid, cv, cnrm) =>
-      struct(
-        (V.dot(col("q_v"), typedlit(cv)) / (col("q_nrm") * lit(cnrm)))
-          .as("c_cos"),
-        lit(-cid).as("neg_id"))
-    }
+    val cand = transform(typedlit(cents.toSeq), c => struct(
+      (V.dot(col("q_v"), c.getField("_2")) /
+        (col("q_nrm") * c.getField("_3"))).as("c_cos"),
+      (-c.getField("_1")).as("neg_id")))
     queries.select(col("q_id"), col("q_v"), col("q_nrm"),
-      explode(slice(sort_array(array(cand.toSeq: _*), asc = false),
-        1, nprobe)).as("p"))
+      explode(slice(sort_array(cand, asc = false), 1, nprobe)).as("p"))
       .select(col("q_id"), col("q_v"), col("q_nrm"),
         (-col("p.neg_id")).as("c_id"))
   }
@@ -750,11 +764,8 @@ object Similarity {
       nprobe: Int = 8, iters: Int = 2): DataFrame = {
     val table =
       graft.sources.Bucketing.ensureMaintainedAssignmentIndex(spark, dir, iters)
-    val queries = emb(spark, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"))
-    probeTopK(spark.table(table), queries,
-      trainCentroids(spark, dir, iters = iters), k, nprobe)
+    probeTopK(spark.table(table), queriesOf(emb(spark, dir)),
+      centroidLiterals(spark, dir, iters), k, nprobe, NumQueries)
   }
 
   /** RETRAIN lifecycle for the maintained assignment index — the
@@ -835,11 +846,8 @@ object Similarity {
     * other assignment source) can answer the same queries. */
   def servedTopK(spark: SparkSession, dir: String, assigned: DataFrame,
       k: Int = 10, nprobe: Int = 8, iters: Int = 2): DataFrame = {
-    val queries = emb(spark, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"))
-    probeTopK(assigned, queries, trainCentroids(spark, dir, iters = iters),
-      k, nprobe)
+    probeTopK(assigned, queriesOf(emb(spark, dir)),
+      centroidLiterals(spark, dir, iters), k, nprobe, NumQueries)
   }
 
   /** Harness query `sim_topk_retrained`: the standard query set served
@@ -1015,15 +1023,15 @@ object Similarity {
     * persisted assignment memo — the semantic half of
     * [[graft.operators.Retrieval.hybridSearch]]: the fusion operator
     * picks which ids query, everything else is the standard
-    * [[maintainedTopK]] probe tail (frozen centroids, nprobe inverted
-    * lists, per-query window). */
+    * [[probeTopK]] serve (frozen centroids, nprobe inverted lists,
+    * bounded TopK, |qIds|·k output bound). */
   def probedTopKForIds(spark: SparkSession, dir: String, qIds: Seq[Long],
       k: Int = 10, nprobe: Int = 8, iters: Int = 2): DataFrame = {
     val queries = emb(spark, dir).filter(col("vec_id").isin(qIds: _*))
       .select(col("vec_id").as("q_id"), col("v").as("q_v"),
         col("nrm").as("q_nrm"))
     probeTopK(assignmentTable(spark, dir, iters), queries,
-      trainCentroids(spark, dir, iters = iters), k, nprobe)
+      centroidLiterals(spark, dir, iters), k, nprobe, qIds.distinct.size)
   }
 
   /** The screening kernel over EXPLICIT frames — `batch` is any

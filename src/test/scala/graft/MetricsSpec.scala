@@ -21,6 +21,27 @@ class MetricsSpec extends AnyFunSuite {
     assert(m.render.contains("failed"))
   }
 
+  test("warm index serves run in three jobs each: bm25Batch and " +
+      "probedTopKForIds (one per shuffle or broadcast, one result)") {
+    val R = graft.operators.Retrieval
+    val S = graft.operators.Similarity
+    def bm25() = R.bm25Batch(spark, sf, R.QueryBatch, 10).collect()
+    def ann() = S.probedTopKForIds(spark, sf, R.QueryBatch.map(_._1), 10)
+      .collect()
+    // the first calls build the impact memo, the assignment memo and
+    // the codebook artifact; the pinned counts are the warm serve's
+    bm25(); ann()
+    val (b, mb) = RunMetrics.instrument(spark)(bm25())
+    val (a, ma) = RunMetrics.instrument(spark)(ann())
+    assert(b.nonEmpty && a.nonEmpty)
+    // bm25Batch: the impact scan's shuffle, the fold's shuffle, the
+    // window + TakeOrderedAndProject result
+    assert(mb.jobs == 3 && mb.failedJobs == 0, mb.render)
+    // probedTopKForIds: the probe broadcast, the list scan's TopK
+    // shuffle, the result
+    assert(ma.jobs == 3 && ma.failedJobs == 0, ma.render)
+  }
+
   test("listener is removed after the run (no counters tick afterwards)") {
     import org.apache.spark.sql.graftshim.Shim
     val l = new RunMetrics

@@ -94,10 +94,35 @@ class PlanSpec extends AnyFunSuite {
     // memo; the only raw-table scan is embeddings for the 3 query
     // vectors (the encoder stand-in) — the corpus is never tokenized
     // or re-assigned per query
-    assert(p.contains("graft-memo-postings"), p)
+    assert(p.contains("graft-memo-bm25impacts"), p)
     assert(p.contains("graft-memo-ivf_assign"), p)
     assert(!p.contains("documents"),
       s"per-query corpus scan leaked into the fused path:\n$p")
+  }
+
+  test("bm25_batch folds the impact memo alone: no postings, doc-length " +
+      "or stats scan, no broadcast") {
+    val p = planOf("bm25_batch")
+    assert(p.contains("graft-memo-bm25impacts"), p)
+    Seq("graft-memo-postings", "graft-memo-doclen", "graft-memo-bm25stats",
+      "BroadcastExchange").foreach(x => assert(!p.contains(x), s"$x in:\n$p"))
+  }
+
+  test("bounded index serves end in TakeOrderedAndProject, never a " +
+      "range-partitioned sort; the IVF serves rank without a Window") {
+    Seq("bm25_batch", "hybrid_search", "sim_topk_ivf", "sim_topk_ivf_kmeans",
+        "sim_topk_maintained").foreach { q =>
+      val p = planOf(q)
+      assert(p.contains("TakeOrderedAndProject"), s"$q:\n$p")
+      assert(!p.contains("rangepartitioning"), s"$q:\n$p")
+    }
+    val ivf = Shim.executedPlan(graft.operators.Similarity.probedTopKForIds(
+      spark, sf, Seq(1L, 2L, 3L))).toString
+    assert(ivf.contains("TakeOrderedAndProject"), ivf)
+    assert(!ivf.contains("rangepartitioning"), ivf)
+    Seq("sim_topk_ivf", "sim_topk_ivf_kmeans", "sim_topk_maintained")
+      .map(planOf).foreach(p => assert(!p.contains("Window"), p))
+    assert(!ivf.contains("Window"), ivf)
   }
 
   test("phrase_from_index serves from the positional memo, never documents") {

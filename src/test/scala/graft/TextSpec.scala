@@ -649,6 +649,20 @@ class TextSpec extends AnyFunSuite {
       "duplicated query term double-counted in the batch ranking")
   }
 
+  test("empty query lists return zero rows with the serves' normal schema") {
+    val R = graft.operators.Retrieval
+    val S = graft.operators.Similarity
+    Seq(
+      R.bm25Search(spark, TestSpark.sf, Seq()) -> R.bm25Search(spark, TestSpark.sf),
+      R.bm25Batch(spark, TestSpark.sf, Seq()) -> R.bm25Batch(spark, TestSpark.sf),
+      S.probedTopKForIds(spark, TestSpark.sf, Seq()) ->
+        S.probedTopKForIds(spark, TestSpark.sf, Seq(1L))
+    ).foreach { case (empty, normal) =>
+      assert(empty.schema === normal.schema)
+      assert(empty.collect().isEmpty)
+    }
+  }
+
   test("hybridSearch: fused ranking equals an RRF recompute of both sides") {
     val R = graft.operators.Retrieval
     // recompute the fusion in plain Scala from the two candidate pools,
