@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned so timestamp results (and therefore oracle hashes) never
-      // depend on the host timezone — Verify pins it too
-      .config("spark.sql.session.timeZone", "UTC")
-      // TypedImperativeAggregates (TopK/BottomK) run under
-      // ObjectHashAggregateExec, whose default 128-groups-per-partition
-      // fallback silently reverts to sort-based aggregation — the bench
-      // must measure the intended hash plan, not the fallback sort
-      // (same setting ScaleProbe100 uses)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session pins UTC and keeps TopK/BottomK on the intended
+    // ObjectHashAggregate plan, not the 128-group sort fallback
+    val spark = Session()
     // warm the two scan paths once so the first measured query doesn't
     // absorb file-index/codegen bootstrap cost. In try: a broken table
     // must cost its own queries, not the whole round's perf signal

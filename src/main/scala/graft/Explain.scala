@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan inspection helper: prints formatted physical plans for selected
-  * queries (all with no arg). */
+  * queries (all with no arg). Pinned to local[8] so `plans/` dumps
+  * compare across boxes. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session("8")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     names.foreach { n =>

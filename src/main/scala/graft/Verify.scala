@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,17 @@ object Verify {
     // optional 3rd arg: comma-separated query subset (local iteration;
     // the driver always runs the full map)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep TopK/BottomK queries on the intended ObjectHashAggregate
-      // plan (not the 128-group sort fallback) — results are identical
-      // either way, but Verify should exercise the production plan
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4194304")
-      .config("spark.ui.enabled", "false")
-      // GRAFT_ANSI=1 PINS ANSI SQL mode on for the silent-overflow
-      // sweep — any Long product past 2^63 (the DSIR r14 finding)
-      // becomes a LOUD error row in errors.json instead of garbage.
-      // When unset, DO NOT touch the conf: the session default (ON in
-      // Spark 4) is what every oracle row was written against —
-      // explicitly forcing false here flipped size(null) from null to
-      // the legacy −1 and failed ten null-gate rows (r15 finding:
-      // never set a semantics conf to a value you didn't choose).
-      .config(Map("spark.sql.ansi.enabled" -> "true")
-        .filter(_ => sys.env.get("GRAFT_ANSI").contains("1")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    // GRAFT_ANSI=1 PINS ANSI SQL mode on for the silent-overflow
+    // sweep — any Long product past 2^63 (the DSIR r14 finding)
+    // becomes a LOUD error row in errors.json instead of garbage.
+    // When unset, DO NOT touch the conf: the session default (ON in
+    // Spark 4) is what every oracle row was written against —
+    // explicitly forcing false here flipped size(null) from null to
+    // the legacy −1 and failed ten null-gate rows (r15 finding:
+    // never set a semantics conf to a value you didn't choose).
+    if (sys.env.get("GRAFT_ANSI").contains("1"))
+      spark.conf.set("spark.sql.ansi.enabled", "true")
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries

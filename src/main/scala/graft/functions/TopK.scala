@@ -37,8 +37,9 @@ import org.apache.spark.sql.types._
   * aggregation — re-introducing the very sort this aggregate avoids.
   * Jobs with many groups (the kNN graph has one per query vector) must
   * raise it; the k-element buffers keep even millions of groups within
-  * ordinary executor memory (see ScaleProbe100's session config and the
-  * measured before/after in NOTES.md).
+  * ordinary executor memory ([[graft.Session]] raises it for every
+  * main; the measured before/after is in NOTES.md "Round 8: kNN graph
+  * + semantic clusters + cluster quota").
   */
 case class TopK(
     child: Expression,

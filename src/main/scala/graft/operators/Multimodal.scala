@@ -281,34 +281,22 @@ object Multimodal {
       .mapPartitions { it =>
         import scala.jdk.CollectionConverters._
         val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
-        val writer = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
-          .iterator().asScala.find(_.isFileTypeSupported(wave))
-          .getOrElse(throw new IllegalStateException("no WAVE writer SPI"))
-        // select THE reader that parses our RIFF/WAVE container by
-        // probing a one-sample WAV ONCE per partition — iterating the
-        // provider list per row would run the JDK's MIDI-backed reader
+        // writer and reader are selected ONCE per partition by round
+        // tripping a one-sample WAV — iterating the provider list per
+        // row would run the JDK's MIDI-backed reader
         // (SoftMidiAudioFileReader) on every row, and ITS not-mine
         // check re-enters the synchronized provider registry
         // (JSSecurityManager.getProviders — measured 18k of 19k stack
         // samples under 32-way decode); the WAVE reader itself is a
         // stateless stream parser with no shared registry path
-        val probeWav = {
-          val fmt = new javax.sound.sampled.AudioFormat(16000f, 16, 1,
-            true, false)
-          val bos = new java.io.ByteArrayOutputStream()
-          writer.write(new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(Array[Byte](0, 0)), fmt, 1L),
-            wave, bos)
-          bos.toByteArray
+        val (writer, probeWav) = waveWriter(java.util.ServiceLoader
+          .load(classOf[javax.sound.sampled.spi.AudioFileWriter])
+          .iterator().asScala)
+        val (reader, _) = firstWorking(java.util.ServiceLoader
+            .load(classOf[javax.sound.sampled.spi.AudioFileReader])
+            .iterator().asScala, "WAVE reader") {
+          _.getAudioInputStream(new java.io.ByteArrayInputStream(probeWav))
         }
-        val reader = java.util.ServiceLoader
-          .load(classOf[javax.sound.sampled.spi.AudioFileReader])
-          .iterator().asScala.find { r =>
-            try { r.getAudioInputStream(
-              new java.io.ByteArrayInputStream(probeWav)); true }
-            catch { case scala.util.control.NonFatal(_) => false }
-          }.getOrElse(throw new IllegalStateException("no WAVE reader SPI"))
         def decodeOf(in: java.io.InputStream) = reader.getAudioInputStream(in)
         it.map { id =>
           val rate = 16000
@@ -353,6 +341,35 @@ object Multimodal {
       .toDF()
       .orderBy("doc_id")
   }
+
+  /** The first provider whose `probe` succeeds, with the probe's
+    * result: `javax.sound.sampled.AudioSystem`'s own rule, which moves
+    * to the next provider when one refuses (a writer throws
+    * IllegalArgumentException for a format it cannot write, a reader
+    * UnsupportedAudioFileException). Provider order is unspecified, so
+    * a capability flag alone is not enough: WaveFloatFileWriter also
+    * reports WAVE support but writes PCM_FLOAT only. */
+  private[graft] def firstWorking[P, R](providers: Iterator[P],
+      what: String)(probe: P => R): (P, R) =
+    providers.flatMap { p =>
+      try Some(p -> probe(p))
+      catch { case scala.util.control.NonFatal(_) => None }
+    }.nextOption().getOrElse(throw new IllegalStateException(s"no $what SPI"))
+
+  /** The first of `writers` that writes a one-sample 16 kHz mono
+    * 16-bit PCM WAV, with the bytes it wrote (the reader probe). */
+  private[graft] def waveWriter(
+      writers: Iterator[javax.sound.sampled.spi.AudioFileWriter])
+      : (javax.sound.sampled.spi.AudioFileWriter, Array[Byte]) =
+    firstWorking(writers, "WAVE writer") { w =>
+      val bos = new java.io.ByteArrayOutputStream()
+      w.write(new javax.sound.sampled.AudioInputStream(
+          new java.io.ByteArrayInputStream(Array[Byte](0, 0)),
+          new javax.sound.sampled.AudioFormat(16000f, 16, 1, true, false),
+          1L),
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      bos.toByteArray
+    }
 
   /** Decoded-video features from a REAL multi-frame codec round-trip
     * (see [[videoDecode]]): frame count from the container demux,

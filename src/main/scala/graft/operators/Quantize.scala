@@ -242,9 +242,9 @@ object Quantize {
     * shape for oracle replay, but it stores vec_id and nrm M times and
     * makes the ADC scan a join + aggregation over n·M rows; packed, the
     * scan is n rows of ~(id + norm + M codes) and scoring is a narrow
-    * per-row fold. ScaleProbe100 measured the difference at 100×: the
-    * long-format ADC LOST to the brute-force comparator; the packed
-    * layout is what restores the win. */
+    * per-row fold. At 200k vectors the long-format ADC LOST to the
+    * brute-force comparator, and the packed layout is what restores the
+    * win (NOTES.md "Round 7: PQ at 100x": 5.4 s long vs 1.6 s brute). */
   def pqPackedIndexTable(spark: SparkSession, dir: String,
       iters: Int = 2): DataFrame =
     Memo.table(spark, dir, s"pq_packed_$iters") {
@@ -269,8 +269,34 @@ object Quantize {
     * n·M-row aggregation — the only shuffle left is the per-query
     * top-k window, the same one the brute-force scan pays. */
   def pqPackedTopK(spark: SparkSession, dir: String, k: Int = 10,
-      iters: Int = 2): DataFrame =
-    pqPackedTopKWith(spark, dir, k, iters, exactFold = true)
+      iters: Int = 2): DataFrame = {
+    // collected per serve (r18, reverting the r17 artifact cache): the
+    // |Q|·M·Ksub ADC lookup table is QUERY-side state — a real serve
+    // computes its LUT per query batch, so caching it per dataset
+    // measured a warm path no production serve has. The collect is one
+    // bounded job over codebook-sized data.
+    val luts: Seq[(Long, Double, Seq[Seq[Double]])] =
+      lutOf(queriesOf(emb(spark, dir)),
+          trainCodebooks(spark, dir, iters)).collect()
+        .groupBy(r => (r.getAs[Long]("q_id"), r.getAs[Double]("q_nrm")))
+        .toSeq.map { case ((q, qn), rows) =>
+          val tbl = Array.fill(M, Ksub)(0.0)
+          rows.foreach { r =>
+            tbl(r.getAs[Int]("sub"))(r.getAs[Long]("code").toInt) =
+              r.getAs[Double]("ip")
+          }
+          (q, qn, tbl.map(_.toSeq).toSeq)
+        }.sortBy(_._1)
+    import spark.implicits._
+    val lutDf = luts.toDF("q_id", "q_nrm", "tbl")
+    topKTail(pqPackedIndexTable(spark, dir, iters)
+      .crossJoin(broadcast(lutDf))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"),
+        (exactOrderedFold(s => element_at(element_at(col("tbl"), s + 1),
+          element_at(col("codes"), s + 1) + 1)) /
+          (col("q_nrm") * col("nrm"))).as("cos")), k)
+  }
 
   /** THE packed exact-fold kernel: the ordered M-addend fold every
     * packed serve scores through when it must hash-equal the long
@@ -310,50 +336,6 @@ object Quantize {
     * compares the two PRODUCTION kernels, not a replica of either. */
   private[graft] def exactUnorderedSum(ip: Column): Column =
     graft.functions.DecimalConv.decSum(ip)
-
-  /** [[pqPackedTopK]] with the fold arithmetic selectable: `exactFold`
-    * sums through decimal(38,18) — [[adcServe]]'s exact sum type, the
-    * cross-engine hashing contract the oracle row runs under; `false`
-    * folds plain
-    * doubles — STILL deterministic (a left fold in fixed subspace
-    * order), just not bit-equal to an any-order sum, and measurably
-    * faster: this is what production ships, and what ScaleProbe100
-    * times as the production ADC number. */
-  def pqPackedTopKWith(spark: SparkSession, dir: String, k: Int = 10,
-      iters: Int = 2, exactFold: Boolean = true): DataFrame = {
-    // collected per serve (r18, reverting the r17 artifact cache): the
-    // |Q|·M·Ksub ADC lookup table is QUERY-side state — a real serve
-    // computes its LUT per query batch, so caching it per dataset
-    // measured a warm path no production serve has. The collect is one
-    // bounded job over codebook-sized data.
-    val luts: Seq[(Long, Double, Seq[Seq[Double]])] =
-      lutOf(queriesOf(emb(spark, dir)),
-          trainCodebooks(spark, dir, iters)).collect()
-        .groupBy(r => (r.getAs[Long]("q_id"), r.getAs[Double]("q_nrm")))
-        .toSeq.map { case ((q, qn), rows) =>
-          val tbl = Array.fill(M, Ksub)(0.0)
-          rows.foreach { r =>
-            tbl(r.getAs[Int]("sub"))(r.getAs[Long]("code").toInt) =
-              r.getAs[Double]("ip")
-          }
-          (q, qn, tbl.map(_.toSeq).toSeq)
-        }.sortBy(_._1)
-    import spark.implicits._
-    val lutDf = luts.toDF("q_id", "q_nrm", "tbl")
-    topKTail(pqPackedIndexTable(spark, dir, iters)
-      .crossJoin(broadcast(lutDf))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), {
-        def lookup(s: Column) = element_at(element_at(col("tbl"), s + 1),
-          element_at(col("codes"), s + 1) + 1)
-        val ips =
-          if (exactFold) exactOrderedFold(lookup)
-          else
-            aggregate(sequence(lit(0), lit(M - 1)), lit(0.0),
-              (acc, s) => acc + lookup(s))
-        (ips / (col("q_nrm") * col("nrm"))).as("cos")
-      }), k)
-  }
 
   /** Encoding of ONE corpus slice against the FROZEN memoized
     * codebooks — the build (`newBatch = false`) and increment
@@ -638,9 +620,11 @@ object Quantize {
     * this equals a long-typed fold bit-for-bit — because the "honest"
     * zip_with+aggregate integer fold allocates an intermediate array
     * per SCORED PAIR and measured 5× SLOWER than the brute double scan
-    * at 200k vectors (ScaleProbe100), inverting the point of the
-    * compressed layout; the one array<int>→array<double> cast is per
-    * ROW, before the query cross join, amortized over |Q| scores. The
+    * at 200k vectors (NOTES.md "Round 12 FINAL close": SQ8 full scan
+    * 15 s before the codegen'd dot, 3.6 s after, brute 2.5 s),
+    * inverting the point of the compressed layout; the one
+    * array<int>→array<double> cast is per ROW, before the query cross
+    * join, amortized over |Q| scores. The
     * two divisions are pinned left-to-right so the oracle replays the
     * IEEE order. */
   private def int8Scored(spark: SparkSession, dir: String): DataFrame = {

@@ -149,12 +149,21 @@ object Relational {
   /** O2 as a window: the reference's LIMIT/OFFSET page k
     * (`payment_intent.rs:61,65-66`) re-expressed as `row_number` over the
     * page sort key — deterministic (the reference's pagination is not:
-    * SURVEY.md §2.5 correctness note). Page 3, page size 100. */
+    * SURVEY.md §2.5 correctness note). Page 3, page size 100. Only the
+    * 300-row prefix is ranked: the sort-plus-limit plans as a
+    * TakeOrderedAndProject (per-partition heaps of 300), so the
+    * unpartitioned window sees 300 rows, never the whole table on one
+    * task — for any page, not only for page ends within Spark's
+    * `windowGroupLimitThreshold`, where its InferWindowGroupLimit rule
+    * would insert the same top-k. Both sort null keys first, so the
+    * prefix is the window's. */
   def paginationWindow(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.orderBy("o_orderkey")
+    val (page, size) = (3, 100)
     Tables.load(spark, dir, "orders")
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn").between(201, 300))
+      .orderBy("o_orderkey").limit(page * size)
+      .withColumn("rn",
+        row_number().over(Window.orderBy("o_orderkey")).cast("long"))
+      .filter(col("rn") > (page - 1) * size)
       .select("rn", "o_orderkey", "o_custkey", "o_orderstatus")
   }
 

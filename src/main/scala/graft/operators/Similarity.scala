@@ -673,10 +673,8 @@ object Similarity {
   }
 
   /** The pre-batch graph memo behind [[knnGraphMaintained]] — the old
-    * slice's kNN edges with RAW scores. Package-visible so the scale
-    * probe can time the base build APART from the bounded fold-in (the
-    * fold-in is the claim; the base costs a rebuild by definition). */
-  private[graft] def knnGraphBase(spark: SparkSession, dir: String,
+    * slice's kNN edges with RAW scores. */
+  private def knnGraphBase(spark: SparkSession, dir: String,
       k: Int = 3, nprobe: Int = 4, iters: Int = 2,
       mod: Int = 10): DataFrame =
     Memo.table(spark, dir, s"knn_base_${k}_${nprobe}_${iters}_$mod") {

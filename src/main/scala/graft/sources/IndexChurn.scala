@@ -174,11 +174,13 @@ object IndexChurn {
     * Dirty detection has two modes. The default (`tombstonesOnly =
     * false`) is exact — one groupBy over the whole index finds every
     * superseded version and tombstone — but that aggregate is O(index)
-    * and, measured at 100× (ScaleProbe100 `churn`), costs MORE than
-    * the bucket rewrite itself. `tombstonesOnly = true` derives the
-    * dirty-bucket set from the tombstone rows alone (a column-pruned
-    * scan, no shuffle): exactly right for delete-triggered compaction,
-    * since an update's D before-image flags its bucket too; the only
+    * and, measured at 100×, costs MORE than the bucket rewrite itself
+    * (NOTES.md "Round 7: churn lifecycle economics at 100x": 14.3 s
+    * exact vs 7.0 s tombstonesOnly on identical debt).
+    * `tombstonesOnly = true` derives the dirty-bucket set from the
+    * tombstone rows alone (a column-pruned scan, no shuffle): exactly
+    * right for delete-triggered compaction, since an update's D
+    * before-image flags its bucket too; the only
     * debt it can miss is U-over-U replay duplicates in buckets with no
     * tombstone — harmless (the serve view collapses them; they clear
     * on that bucket's next tombstone-triggered or exact pass). The

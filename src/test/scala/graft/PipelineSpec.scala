@@ -78,6 +78,33 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("audio decode: the WAVE writer is chosen by round trip, past a " +
+      "provider that refuses the format") {
+    import javax.sound.sampled.{AudioFileFormat, AudioInputStream}
+    // reports WAVE support; without `out` it refuses the PCM probe the
+    // way WaveFloatFileWriter does
+    class Fake(out: Option[Array[Byte]])
+        extends javax.sound.sampled.spi.AudioFileWriter {
+      def getAudioFileTypes: Array[AudioFileFormat.Type] =
+        Array(AudioFileFormat.Type.WAVE)
+      def getAudioFileTypes(s: AudioInputStream): Array[AudioFileFormat.Type] =
+        getAudioFileTypes
+      def write(s: AudioInputStream, t: AudioFileFormat.Type,
+          o: java.io.OutputStream): Int = out match {
+        case Some(b) => o.write(b); b.length
+        case None => throw new IllegalArgumentException("PCM_FLOAT only")
+      }
+      def write(s: AudioInputStream, t: AudioFileFormat.Type,
+          f: java.io.File): Int = write(s, t, new java.io.ByteArrayOutputStream)
+    }
+    val refusing = new Fake(None)
+    val second = new Fake(Some("RIFF".getBytes("US-ASCII")))
+    val (w, bytes) = Multimodal.waveWriter(Iterator(refusing, second))
+    assert(w eq second)
+    assert(new String(bytes, "US-ASCII") == "RIFF")
+    intercept[IllegalStateException](Multimodal.waveWriter(Iterator(refusing)))
+  }
+
   test("video decode: animated-GIF round-trip demuxes and decodes exactly") {
     val rows = Multimodal.videoDecode(spark, sf).limit(10).collect()
     assert(rows.length == 10)

@@ -187,6 +187,26 @@ class PlanSpec extends AnyFunSuite {
       s"top-k should sit below the window: $p")
   }
 
+  test("pagination_window ranks a TakeOrderedAndProject prefix: no Window " +
+      "reads the full orders scan") {
+    // planned with Spark's InferWindowGroupLimit off: it only fires for
+    // page ends up to windowGroupLimitThreshold, so the bound must come
+    // from the query itself
+    val key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val p = try planOf("pagination_window") finally spark.conf.set(key, before)
+    // one linear chain, so line order is ancestry: every Window above
+    // the top-k, every scan below it
+    val lines = p.linesIterator.toIndexedSeq
+    def at(s: String) = lines.indices.filter(lines(_).contains(s))
+    val take = at("TakeOrderedAndProject")
+    assert(take.size == 1, p)
+    assert(at("Window").nonEmpty && at("Window").forall(_ < take.head), p)
+    assert(at("Scan parquet").nonEmpty &&
+      at("Scan parquet").forall(_ > take.head), p)
+  }
+
   test("stratified_split ranks in bounded (lang, bucket) windows, never " +
       "a per-language single-partition window over the corpus") {
     val p = planOf("stratified_split")
