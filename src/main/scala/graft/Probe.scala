@@ -66,7 +66,11 @@ object Probe {
     s"$root/graft_probe_${factor}x_$fp"
 
   /** A `factor`× clone of every table under `src`, built once per source
-    * content and reused while its `_DONE` marker holds the fingerprint.
+    * content and reused while its `_DONE` marker holds the fingerprint
+    * and the source path. Building a clone deletes this source's older
+    * `factor`× clones (their `_DONE` names the same source under another
+    * fingerprint), so a changed source does not leave its stale clones
+    * behind; clones of other sources and other factors stay.
     *
     * Every long `*_id`/`*key` column is shifted by the SAME per-copy
     * offset in every table, so cross-table joins (events.user_id ↔
@@ -83,10 +87,18 @@ object Probe {
       root: String): String = {
     val fp = SourceState.dirFingerprint(spark, src)
     val dir = cloneDir(root, factor, fp)
-    val marker = Paths.get(dir, "_DONE")
-    if (!(Files.exists(marker) && Files.readString(marker) == fp)) {
-      val out = new Path(dir)
-      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    val source = Paths.get(src).toAbsolutePath.normalize.toString
+    val stamp = s"$fp\n$source"
+    def stampOf(d: java.nio.file.Path) = {
+      val m = d.resolve("_DONE")
+      if (Files.exists(m)) Some(Files.readString(m)) else None
+    }
+    if (!stampOf(Paths.get(dir)).contains(stamp)) {
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val stale = Option(new java.io.File(root).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith(s"graft_probe_${factor}x_"))
+        .filter(d => stampOf(d.toPath).exists(_.endsWith(s"\n$source")))
+      (stale.map(_.getPath) :+ dir).foreach(d => fs.delete(new Path(d), true))
       val copies = spark.range(factor.toLong).select(col("id").as("_copy"))
       new java.io.File(src).listFiles().map(_.getName)
         .filter(_.endsWith(".parquet")).sorted.foreach { file =>
@@ -102,8 +114,8 @@ object Probe {
             }: _*)
           cloned.repartition(64).write.parquet(s"$dir/$file")
         }
-      Files.createDirectories(marker.getParent)
-      Files.writeString(marker, fp)
+      Files.createDirectories(Paths.get(dir))
+      Files.writeString(Paths.get(dir, "_DONE"), stamp)
     }
     dir
   }

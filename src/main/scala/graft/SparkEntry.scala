@@ -1482,7 +1482,7 @@ object SparkEntry {
     // the input hop is the EXACT expansion (format is correctly
     // rounded; sub-5e-19 guarded to 0 — DuckDB's parser mis-rounds
     // long-mantissa tiny exponents, and those quantize to 0 anyway),
-    // replaying Spark's ExactDecimalString: a VARCHAR (Ryu-shortest)
+    // replaying Spark's ExactDecimal18 (decExact): a VARCHAR (Ryu-shortest)
     // hop forks from Java-toString-mediated casts on 1e16+ doubles
     // (the vecdegen-s2 codebook finding)
     def update(assigned: String, name: String) =

@@ -66,8 +66,8 @@ object DecimalConv {
   def decSum(c: Column): Column =
     sum(decExact(c)).cast("double")
 
-  /** The EXACT double→decimal input hop — [[ExactDecimalString]]'s
-    * plain-string expansion parsed into the sum type, so the decimal
+  /** The EXACT double→decimal input hop — [[ExactDecimal18]]: the
+    * double's exact expansion quantized into the sum type, so the decimal
     * image of each addend is the double's true IEEE value on BOTH
     * engines (Spark's native cast is Java-toString-VALUE-mediated,
     * DuckDB's VARCHAR hop is Ryu — two algorithms that disagree on

@@ -5,12 +5,13 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType}
 
-/** The EXACT decimal expansion of a double, as a plain string — the
-  * canonical double→decimal input hop for every cross-engine Lloyd
-  * mean ([[DecimalConv.decMean]]/[[DecimalConv.f32Mean]]).
+/** The double's EXACT IEEE value quantized straight to decimal(38,18)
+  * HALF_UP — the canonical double→decimal input hop for every
+  * cross-engine decimal sum and Lloyd mean ([[DecimalConv.decExact]]:
+  * [[DecimalConv.decSum]], [[DecimalConv.decMean]],
+  * [[DecimalConv.f32Mean]]).
   *
   * Why this exists (the vecdegen-s2 `sim_topk_ivfpq_res` finding):
   * Spark's native double→decimal cast goes through Java's PRE-RYU
@@ -32,43 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * quantization over 53k adversarial samples; |x| < 5e-19 is guarded
   * to 0 on the oracle side because DuckDB's string→decimal parser
   * mis-rounds long-mantissa huge-negative-exponent strings — those
-  * values quantize to 0 at scale 18 on both sides regardless).
-  * `toPlainString` (never scientific) parses identically everywhere.
-  */
-case class ExactDecimalString(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "exact_decimal_str"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"exact_decimal_str expects a double, got ${child.dataType.sql}")
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(new java.math.BigDecimal(
-      ExactDecimal.requireFinite(v.asInstanceOf[Double], prettyName))
-      .toPlainString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  new java.math.BigDecimal(graft.functions.ExactDecimal
-         |    .requireFinite($d, "exact_decimal_str")).toPlainString());"""
-        .stripMargin)
-
-  override protected def withNewChildInternal(c: Expression): ExactDecimalString =
-    copy(child = c)
-}
-
-/** [[ExactDecimalString]] without the string round-trip: the double's
-  * EXACT IEEE value quantized straight to decimal(38,18) HALF_UP —
-  * value-identical to `exact_decimal_str(x)::decimal(38,18)` (Spark's
-  * string→decimal cast is the same HALF_UP at target scale), ~2×
-  * cheaper per addend (one BigDecimal setScale instead of BigDecimal →
-  * plainString → UTF8String → decimal re-parse). This is the hop the
-  * decSum family runs in hot serve paths; the string form remains for
-  * call sites that need the expansion itself. */
+  * values quantize to 0 at scale 18 on both sides regardless). The
+  * quantization is the same HALF_UP at scale 18 that the oracle's
+  * string→decimal cast applies, with no string round-trip on the
+  * Spark side. */
 case class ExactDecimal18(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DecimalType(38, 18)
   override def nullIntolerant: Boolean = true
@@ -151,9 +119,6 @@ object ExactDecimal {
           "on finite doubles; filter or fix the producing expression")
     v
   }
-
-  def exactDecimalStr(c: Column): Column =
-    Shim.column(ExactDecimalString(Shim.expression(c)))
 
   def exactDecimal18(c: Column): Column =
     Shim.column(ExactDecimal18(Shim.expression(c)))

@@ -53,14 +53,16 @@ object Memo {
   private val readCache =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, DataFrame]]()
 
-  // r17: driver-side ARTIFACT cache — the bounded literal artifacts the
-  // ANN serves collect per query (centroid/codebook literals, |Q|·nprobe
-  // probe-pair lists, ADC lookup tables) are deterministic per dataset,
-  // but every serve re-ran the collect as its own Spark job (~50 ms × 2-3
-  // jobs × every serve in every pass). Keyed exactly like memo tables
-  // (session + dataset content fingerprint + name), so a regenerated
-  // dataset rebuilds its artifacts. The monitor is the same reentrant
-  // lock as table builds — artifact builders may read memo tables.
+  // driver-side ARTIFACT cache for bounded, INDEX-side literals — the
+  // IVF codebooks (Similarity.centroidLiterals and the sample
+  // codebook), which every literal-probe serve would otherwise
+  // re-collect as its own Spark job. Query-side literals — probe-pair
+  // lists, ADC lookup tables — are NOT cached: r18 reverted the r17
+  // caching of those, since a real serve computes them per query batch.
+  // Keyed exactly like memo tables (session + dataset content
+  // fingerprint + name), so a regenerated dataset rebuilds its
+  // artifacts. The monitor is the same reentrant lock as table builds —
+  // artifact builders may read memo tables.
   private val artifacts =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, AnyRef]]()
 
@@ -129,19 +131,6 @@ object Memo {
       case None => Files.createTempDirectory(s"graft-memo-$name-").toString
     }
 
-  /** Return the memoized table for (session, dir, name), building and
-    * materializing it on first use. `build` runs at most once per key.
-    *
-    * NOT computeIfAbsent: builders nest (the pair table's builder reads
-    * the signature memo), and ConcurrentHashMap throws "Recursive
-    * update" when a nested computeIfAbsent lands in the same bin. A
-    * monitor is reentrant, so a build may memoize its own inputs.
-    * Deliberate tradeoff: first-time builds of DIFFERENT keys serialize
-    * on the one monitor (per-key locks would deadlock-proof only for
-    * our current acyclic build DAG and break the reentrancy guarantee
-    * in general); hits take the lock-free fast path, and builds are
-    * once-per-dataset, so the serialization window is the cold start
-    * only. */
   /** Materialize a ONE-OFF intermediate to a fresh parquet path — NOT
     * memoized, every call writes anew. For per-batch intermediates
     * (an increment's candidate set) that are consumed more than once
@@ -192,6 +181,19 @@ object Memo {
     try use(df) finally release(spark, p)
   }
 
+  /** Return the memoized table for (session, dir, name), building and
+    * materializing it on first use. `build` runs at most once per key.
+    *
+    * NOT computeIfAbsent: builders nest (the pair table's builder reads
+    * the signature memo), and ConcurrentHashMap throws "Recursive
+    * update" when a nested computeIfAbsent lands in the same bin. A
+    * monitor is reentrant, so a build may memoize its own inputs.
+    * Deliberate tradeoff: first-time builds of DIFFERENT keys serialize
+    * on the one monitor (per-key locks would deadlock-proof only for
+    * our current acyclic build DAG and break the reentrancy guarantee
+    * in general); hits take the lock-free fast path, and builds are
+    * once-per-dataset, so the serialization window is the cold start
+    * only. */
   def table(spark: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame = {
     val m = lock.synchronized {

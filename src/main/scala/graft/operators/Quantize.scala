@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{Vectors => V}
 
@@ -25,6 +24,7 @@ import graft.functions.{Vectors => V}
   * encoding AND the ADC scan exactly).
   */
 object Quantize {
+  import Similarity.topKTail
 
   /** PQ geometry: M subspaces of SubDim dims, Ksub centroids each —
     * 8 bytes of code per vector, 16-entry lookup tables per subspace. */
@@ -185,20 +185,6 @@ object Quantize {
       .select(col("vec_id").as("q_id"), col("q_nrm"), col("sub"),
         col("c_id").as("code"),
         round(V.dot(col("sv"), col("cv")), 10).as("ip"))
-
-  /** THE per-query top-k tail every serve ranks through: (cos DESC,
-    * vec_id) window, k-cut, round-6, (q_id, rk) order — one definition
-    * so a tie-break or rounding tweak cannot desynchronize serves that
-    * must hash-equal each other. Input: (q_id, vec_id, cos). */
-  private def topKTail(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rk")
-  }
 
   /** Harness query `sim_topk_pq`: asymmetric-distance (ADC) top-k — the
     * standard query set ranked by approximate cosine over the
@@ -436,28 +422,8 @@ object Quantize {
       nprobe: Int = 8, iters: Int = 2): DataFrame = {
     val table = graft.sources.Bucketing.ensureIvfPqIndex(spark, dir, iters)
     val queries = queriesOf(emb(spark, dir))
-    // coarse probe through Similarity.probesOf — the ONE definition of
-    // probe selection, so IVFPQ can never probe different lists than
-    // IVF for the same query; bounded |Q|·nprobe rows, collected like
-    // the LUTs
-    val cents = Similarity.trainCentroids(spark, dir, iters = iters)
-    // collected per serve (r18, reverting the r17 artifact cache):
-    // probe assignments are QUERY-side state — real serves get new
-    // queries, so the bounded |Q|·nprobe collect is part of every
-    // serve's declared work
-    val probePairs =
-      Similarity.probesOf(
-          queries.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-            col("nrm").as("q_nrm")), cents, nprobe)
-        .select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val probedLists = probePairs.map(_._2).distinct
     val lut = lutOf(queries, trainCodebooks(spark, dir, iters))
-    import spark.implicits._
-    val probeDf = probePairs.toDF("q_id", "c_id")
-    topKTail(spark.table(table)
-      .filter(col("c_id").isin(probedLists: _*)) // bucket-prunes the scan
-      .join(broadcast(probeDf), "c_id")          // per-query list pairing
+    topKTail(probedScan(spark, dir, table, queries, nprobe, iters)
       .join(broadcast(lut), Seq("q_id", "sub", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       // grouping keys ⊇ c_id (the bucket column): the partial+final sum
@@ -468,6 +434,38 @@ object Quantize {
         first(col("nrm")).as("nrm"), first(col("q_nrm")).as("q_nrm"))
       .withColumn("cos",
         col("ips") / (col("q_nrm") * col("nrm"))), k)
+  }
+
+  /** THE coarse-probed scan of a c_id-bucketed IVF catalog `table`,
+    * shared by the IVFPQ, residual-IVFPQ and IVF-SQ8 serves: each query
+    * of `queries` (vec_id, v, nrm) picks its `nprobe` lists through
+    * [[Similarity.withProbes]] over the memoized trained codebook — the
+    * ONE definition of probe selection, so these serves can never probe
+    * different lists than IVF for the same query. The bounded
+    * |Q|·nprobe probe pairs are collected in ONE job, per serve (r18,
+    * reverting the r17 artifact cache: probe assignments are QUERY-side
+    * state — real serves get new queries); the distinct lists become a
+    * literal `c_id IN (…)` filter that bucket-prunes the scan, and the
+    * pairs join back as a broadcast (q_id, c_id, qc_ip) relation.
+    * `qc_ip` is round(q·c, 10) over the RAW codebook doubles, looked up
+    * by c_id in the same literal artifact (no join, no extra job) — the
+    * residual serve's q·x = q·c + q·r term. `prep` runs on the pruned
+    * scan, below the probe join. */
+  private def probedScan(spark: SparkSession, dir: String, table: String,
+      queries: DataFrame, nprobe: Int, iters: Int,
+      prep: DataFrame => DataFrame = identity): DataFrame = {
+    val cents = Similarity.centroidLiterals(spark, dir, iters)
+    val centV = typedlit(cents.map(c => c._1 -> c._2).toMap)
+    val probes = Similarity.withProbes(
+        queries.select(col("vec_id").as("q_id"), col("v").as("q_v"),
+          col("nrm").as("q_nrm")), cents, nprobe)
+      .select(col("q_id"), col("c_id"),
+        round(V.dot(col("q_v"), element_at(centV, col("c_id"))), 10))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    import spark.implicits._
+    prep(spark.table(table)
+        .filter(col("c_id").isin(probes.map(_._2).distinct: _*)))
+      .join(broadcast(probes.toDF("q_id", "c_id", "qc_ip")), "c_id")
   }
 
   /** Harness query `sim_topk_ivfpq_rerank`: the end-to-end production
@@ -507,7 +505,8 @@ object Quantize {
       // round-trip keeps the residual at the source data's own
       // precision (the vectors are float32 — FAISS's codebooks are
       // all-float32 for the same reason). The serve's q·c scalar keeps
-      // the RAW centroid (probesOf is shared by every probe path), so
+      // the RAW centroid (probedScan reads it from the codebook literal
+      // withProbes selects with), so
       // the decomposition is q·c_raw + q·(x − float(c)) — off the true
       // q·x by q·(c_raw − float(c)), a relative-6e-8 perturbation of an
       // already-approximate score, and the oracle replays the exact
@@ -543,8 +542,8 @@ object Quantize {
     * quantize the coarse-quantizer RESIDUAL, not the raw vector. For
     * inner products the decomposition is exact in expectation and
     * cheap in structure: q·x = q·c + q·r, so the serve adds ONE
-    * per-(query, probed list) scalar (q·c — already computed while
-    * ranking the lists, rounded like every LUT entry) to the standard
+    * per-(query, probed list) scalar (q·c — computed with the probe
+    * pairs, rounded like every LUT entry) to the standard
     * M-lookup sum over the residual codebooks; no per-list lookup
     * tables are needed, which is what keeps the oracle replay and the
     * broadcast shapes identical to the non-residual serve. Same
@@ -556,25 +555,8 @@ object Quantize {
     val table =
       graft.sources.Bucketing.ensureIvfPqResidualIndex(spark, dir, iters)
     val queries = queriesOf(emb(spark, dir))
-    val cents = Similarity.trainCentroids(spark, dir, iters = iters)
-    // probesOf already emits the rounded q·centroid inner product the
-    // residual decomposition needs (q·x = q·c + q·r) — same window,
-    // same tie-break as every other probe path
-    // collected per serve (r18) — query-side state, same argument as
-    // pqIvfTopK's probe pairs
-    val probeRows =
-      Similarity.probesOf(
-          queries.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-            col("nrm").as("q_nrm")), cents, nprobe)
-        .select("q_id", "c_id", "qc_ip")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val probedLists = probeRows.map(_._2).distinct
     val lut = lutOf(queries, residualCodebooks(spark, dir, iters))
-    import spark.implicits._
-    val probeDf = probeRows.toDF("q_id", "c_id", "qc_ip")
-    topKTail(spark.table(table)
-      .filter(col("c_id").isin(probedLists: _*))
-      .join(broadcast(probeDf), "c_id")
+    topKTail(probedScan(spark, dir, table, queries, nprobe, iters)
       .join(broadcast(lut), Seq("q_id", "sub", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy("c_id", "q_id", "vec_id")
@@ -675,31 +657,16 @@ object Quantize {
   def int8IvfTopK(spark: SparkSession, dir: String, k: Int = 10,
       nprobe: Int = 8, iters: Int = 2): DataFrame = {
     val table = graft.sources.Bucketing.ensureIvfSq8Index(spark, dir, iters)
-    val queries = queriesOf(emb(spark, dir))
-    val cents = Similarity.trainCentroids(spark, dir, iters = iters)
-    // collected per serve (r18) — query-side state, same argument as
-    // pqIvfTopK's probe pairs
-    val probePairs =
-      Similarity.probesOf(
-          queries.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-            col("nrm").as("q_nrm")), cents, nprobe)
-        .select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val probedLists = probePairs.map(_._2).distinct
-    import spark.implicits._
-    val probeDf = probePairs.toDF("q_id", "c_id")
     val q8 = int8IndexTable(spark, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"),
         col("codes").cast("array<double>").as("q_cd"),
         col("scale").as("q_scale"), col("nrm").as("q_nrm"))
-    topKTail(spark.table(table)
-      .filter(col("c_id").isin(probedLists: _*)) // bucket-prunes the scan
-      // per-ROW cast, below the probe join — a vector probed by
-      // several queries is duplicated by the join, so casting after it
-      // would re-run the 64-element conversion per scored pair (the
-      // same amortization int8Scored applies)
-      .withColumn("cd", col("codes").cast("array<double>"))
-      .join(broadcast(probeDf), "c_id")          // per-query list pairing
+    // per-ROW cast, below the probe join — a vector probed by several
+    // queries is duplicated by the join, so casting after it would
+    // re-run the 64-element conversion per scored pair (the same
+    // amortization int8Scored applies)
+    topKTail(probedScan(spark, dir, table, queriesOf(emb(spark, dir)),
+        nprobe, iters, _.withColumn("cd", col("codes").cast("array<double>")))
       .join(broadcast(q8), "q_id")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),

@@ -85,7 +85,7 @@ object Similarity {
       // the decMean convention (DecimalConv): float sums are
       // partial-aggregation-order dependent, so the sum runs through
       // DECIMAL(38,18) — with the EXACT-expansion input hop
-      // (ExactDecimalString: Spark's native cast is
+      // (ExactDecimal18: Spark's native cast is
       // Java-toString-VALUE-mediated, DuckDB's VARCHAR hop is Ryu,
       // and the two disagree on 1e16+ doubles — the vecdegen-s2
       // codebook fork) and the string-mediated decimal→double output
@@ -157,18 +157,30 @@ object Similarity {
   /** Exact top-k cosine for query vectors (vec_id < NumQueries). */
   def bruteForceTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val e = emb(spark, dir)
-    val queries = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    e.crossJoin(broadcast(queries))
+    topKTail(e.crossJoin(broadcast(queriesOf(e)))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"), round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rk")
+        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))).as("cos")), k)
   }
+
+  /** Each query's first `k` rows of a scored (q_id, vec_id, cos, …)
+    * frame under the (cos DESC, vec_id) window, numbered `rk` from 1 —
+    * the one rank definition behind [[topKTail]] and the MMR pools. */
+  private def rankCut(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
+    scored.withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= k)
+  }
+
+  /** THE per-query top-k tail the exact and compressed serves rank
+    * through: [[rankCut]], round-6, (q_id, rk) order — one definition
+    * so a tie-break or rounding tweak cannot desynchronize serves that
+    * must hash-equal each other. Input: (q_id, vec_id, cos). */
+  private[operators] def topKTail(scored: DataFrame, k: Int): DataFrame =
+    rankCut(scored, k)
+      .select(col("q_id"), col("rk"), col("vec_id"),
+        round(col("cos"), 6).as("cos"))
+      .orderBy("q_id", "rk")
 
   /** Memoized SAMPLE-centroid assignment — the untrained IVF's
     * persisted index state. Like [[assignmentTable]] (the trained
@@ -214,31 +226,6 @@ object Similarity {
     e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("q_v"),
         col("nrm").as("q_nrm"))
-
-  /** Each query's `nprobe` nearest centroids as exploded probe rows
-    * from a centroid FRAME — probe selection for the paths that also
-    * need the query·centroid inner product (Quantize's residual and LUT
-    * serves) or whose query set is an arbitrary batch (the at-ingest
-    * screen): a top-nprobe window over |Q|×C rows, tie-broken
-    * (c_cos DESC, c_id) exactly like [[withProbes]]' literal-codebook
-    * form, so the two can never select different probe sets. */
-  private[operators] def probesOf(queries: DataFrame, centroids: DataFrame,
-      nprobe: Int): DataFrame = {
-    val wProbe = Window.partitionBy("q_id")
-      .orderBy(col("c_cos").desc, col("c_id"))
-    queries.crossJoin(broadcast(centroids))
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"),
-        (V.dot(col("q_v"), col("c_v")) / (col("q_nrm") * col("c_nrm"))).as("c_cos"),
-        // the raw query·centroid inner product, rounded like every LUT
-        // entry: the residual-IVFADC serve consumes it (q·x = q·c + q·r)
-        // — emitted here so Quantize's probe paths ride THIS definition
-        // instead of hand-rolling the window (the "ONE definition of
-        // probe selection" contract)
-        round(V.dot(col("q_v"), col("c_v")), 10).as("qc_ip"))
-      .withColumn("crk", row_number().over(wProbe))
-      .filter(col("crk") <= nprobe)
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id"), col("qc_ip"))
-  }
 
   /** The bounded-query IVF serve every `sim_topk_*` probe path shares:
     * each of at most `maxQueries` queries picks its `nprobe` nearest
@@ -482,8 +469,9 @@ object Similarity {
 
   /** The trained codebook collected to the driver — a bounded C×dim
     * artifact (the same shape the PQ codebooks ship), sorted by c_id so
-    * the literal array below is deterministic. */
-  private def centroidLiterals(spark: SparkSession, dir: String,
+    * the literal array below is deterministic. Every trained-IVF probe
+    * selection in this package ([[withProbes]]) reads it. */
+  private[operators] def centroidLiterals(spark: SparkSession, dir: String,
       iters: Int): Array[(Long, Seq[Double], Double)] =
     // artifact-cached (r17): every literal-probe serve re-collected the
     // C-row centroid memo as its own job
@@ -1010,7 +998,7 @@ object Similarity {
     val verdicts = semanticScreenFrom(
       emb(spark, dir).filter(col("vec_id") % mod === 0),
       assignmentTable(spark, dir, iters).filter(col("vec_id") % mod =!= 0),
-      trainCentroids(spark, dir, iters = iters), threshold, nprobe)
+      centroidLiterals(spark, dir, iters), threshold, nprobe)
     Tables.load(spark, dir, "embeddings").select("vec_id", "label")
       .join(verdicts, "vec_id")
       .select("vec_id", "label", "admitted")
@@ -1035,18 +1023,19 @@ object Similarity {
   /** The screening kernel over EXPLICIT frames — `batch` is any
     * (vec_id, v, nrm) arrival set, `assignment` any corpus assignment
     * source under the SAME centroids (the memo, the maintained bucketed
-    * index, a streaming churn serve view). Returns every batch vector
+    * index, a streaming churn serve view), `cents` that codebook as
+    * [[centroidArtifact]] literals. Returns every batch vector
     * with its verdict: `admitted = false` iff some corpus vector in the
     * batch vector's `nprobe` probed lists sits at cosine >= threshold.
     * Public so the streaming ingest loop screens each microbatch
     * against the live index through the same definition the harness
     * row gates. */
   def semanticScreenFrom(batch: DataFrame, assignment: DataFrame,
-      centroids: DataFrame, threshold: Double = 0.40,
+      cents: Array[(Long, Seq[Double], Double)], threshold: Double = 0.40,
       nprobe: Int = 8): DataFrame = {
     val q = batch.select(col("vec_id").as("q_id"), col("v").as("q_v"),
       col("nrm").as("q_nrm"))
-    val probes = probesOf(q, centroids, nprobe)
+    val probes = withProbes(q, cents, nprobe)
     // vec_id != q_id mirrors probeTopK: under at-least-once replay the
     // index already holds the batch's own first-run append, and a
     // vector must not be rejected for matching ITSELF
@@ -1097,19 +1086,7 @@ object Similarity {
   def mmrRerank(spark: SparkSession, dir: String, poolK: Int = 20,
       k: Int = 8): DataFrame = {
     val e = emb(spark, dir)
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val pool = e.crossJoin(broadcast(queriesOf(e)))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("v"), col("nrm"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= poolK)
-      .select(col("q_id"), col("rk"), col("vec_id"), col("v"), col("nrm"),
-        round(col("cos"), 6).as("rel"))
-      // the shortlist (|Q|·poolK rows) has three consumers below —
-      // without the eager cut each re-runs the O(|Q|·n) corpus scan
-      .localCheckpoint()
-    mmrGreedy(pool, k)
+    mmrGreedy(mmrPool(e.crossJoin(broadcast(queriesOf(e))), poolK), k)
   }
 
   /** Harness query `mmr_rerank_ivf`: the SAME greedy over the
@@ -1121,22 +1098,27 @@ object Similarity {
     * [[mmrRerank]]. */
   def mmrRerankIvf(spark: SparkSession, dir: String, poolK: Int = 20,
       k: Int = 8, nprobe: Int = 8, iters: Int = 2): DataFrame = {
-    val e = emb(spark, dir)
-    val probes = probesOf(queriesOf(e),
-      trainCentroids(spark, dir, iters = iters), nprobe)
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val pool = assignmentTable(spark, dir, iters)
-      .join(broadcast(probes), "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("v"), col("nrm"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= poolK)
+    val probes = withProbes(queriesOf(emb(spark, dir)),
+      centroidLiterals(spark, dir, iters), nprobe)
+    mmrGreedy(mmrPool(
+      assignmentTable(spark, dir, iters).join(broadcast(probes), "c_id"),
+      poolK), k)
+  }
+
+  /** The MMR shortlist of a (query, candidate) pair frame carrying
+    * (q_id, q_v, q_nrm, vec_id, v, nrm): each query's top-`poolK`
+    * candidates by exact cosine ([[rankCut]]) as
+    * (q_id, rk, vec_id, v, nrm, rel), `rel` rounded to 6. The shortlist
+    * (|Q|·poolK rows) has three consumers in [[mmrGreedy]] — without
+    * the eager cut each re-runs the candidate scan. */
+  private def mmrPool(pairs: DataFrame, poolK: Int): DataFrame =
+    rankCut(pairs.filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id"), col("v"), col("nrm"),
+          (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm")))
+            .as("cos")), poolK)
       .select(col("q_id"), col("rk"), col("vec_id"), col("v"), col("nrm"),
         round(col("cos"), 6).as("rel"))
       .localCheckpoint()
-    mmrGreedy(pool, k)
-  }
 
   /** The MMR greedy over a shortlist frame
     * (q_id, rk, vec_id, v, nrm, rel) — see [[mmrRerank]] for the

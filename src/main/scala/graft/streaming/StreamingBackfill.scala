@@ -425,6 +425,8 @@ object StreamingBackfill {
       simThreshold: Double = 0.40, checkpointDir: String = ""): Unit = {
     import graft.operators.{Dedup, Memo, Similarity}
     import graft.sources.{Bucketing, IndexChurn}
+    // the frozen codebook as probe literals, collected once per loop
+    val cents = Similarity.centroidArtifact(centroids)
     // a non-empty checkpointDir makes the stream RESUMABLE: a killed
     // process restarts from the last committed offset and REDELIVERS
     // the in-flight batch (at-least-once) — the per-step idempotence
@@ -466,7 +468,7 @@ object StreamingBackfill {
             Similarity.semanticScreenFrom(vecs,
                 IndexChurn.served(s, assignIndexTable, Seq("c_id", "vec_id"))
                   .join(vecs.select("vec_id"), Seq("vec_id"), "left_anti"),
-                centroids, simThreshold)
+                cents, simThreshold)
               .write.mode("overwrite").parquet(s"$outDir/semscreen/batch_id=$id")
             IndexChurn.append(s, assignIndexTable,
               Similarity.assignVectors(vecs, centroids),

@@ -42,6 +42,26 @@ class MetricsSpec extends AnyFunSuite {
     assert(ma.jobs == 3 && ma.failedJobs == 0, ma.render)
   }
 
+  test("warm probed ANN serves: job counts of the withProbes family") {
+    // each serve picks its probes by a narrow map over the memoized
+    // codebook literal (withProbes); the pinned counts are the second
+    // (warm) run's
+    val want = Seq(
+      "sim_topk_ivfpq" -> 9L,
+      "sim_topk_ivfpq_res" -> 9L,
+      "sim_topk_int8_ivf" -> 7L,
+      "mmr_rerank_ivf" -> 10L,
+      "semantic_dedup_incremental" -> 8L)
+    val got = want.map { case (q, _) =>
+      def run() = SparkEntry.queries(q)(spark, sf).collect()
+      run()
+      val (rows, m) = RunMetrics.instrument(spark)(run())
+      assert(rows.nonEmpty && m.failedJobs == 0, s"$q: ${m.render}")
+      q -> m.jobs
+    }
+    assert(got === want)
+  }
+
   test("listener is removed after the run (no counters tick afterwards)") {
     import org.apache.spark.sql.graftshim.Shim
     val l = new RunMetrics

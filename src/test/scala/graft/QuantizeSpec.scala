@@ -270,6 +270,17 @@ class QuantizeSpec extends AnyFunSuite {
     assert(sq8 >= exact - 0.1, s"ivf-sq8 recall $sq8 far below exact $exact")
   }
 
+  test("ivf-sq8 probing every list (nprobe past C) returns exactly the " +
+      "flat SQ8 serve's rows") {
+    // nprobe = 64 slices past the trained codebook, so every inverted
+    // list is probed: the shared probed scan must drop no list and no
+    // vector, and score each pair exactly like the flat scan
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val flat = rows(Quantize.int8TopK(spark, sf, k = 10))
+    assert(flat.nonEmpty)
+    assert(rows(Quantize.int8IvfTopK(spark, sf, k = 10, nprobe = 64)) === flat)
+  }
+
   test("ivfpq: bucket-pruned probed-list scan, recall improves with rerank") {
     val df = Quantize.pqIvfTopK(spark, sf, k = 10)
     val plan = df.queryExecution.executedPlan.toString

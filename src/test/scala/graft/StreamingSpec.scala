@@ -616,7 +616,7 @@ class StreamingSpec extends AnyFunSuite {
       def screenOf(ids: org.apache.spark.sql.DataFrame,
           corpusAssign: org.apache.spark.sql.DataFrame): Map[Long, Boolean] =
         Similarity.semanticScreenFrom(emb.join(ids, "vec_id"),
-            corpusAssign, centroids)
+            corpusAssign, Similarity.centroidArtifact(centroids))
           .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
       val baseAssign = Similarity.assignVectors(
         emb.join(streamedIds, Seq("vec_id"), "left_anti"), centroids)

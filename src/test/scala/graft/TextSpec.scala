@@ -652,11 +652,17 @@ class TextSpec extends AnyFunSuite {
   test("empty query lists return zero rows with the serves' normal schema") {
     val R = graft.operators.Retrieval
     val S = graft.operators.Similarity
+    // the at-ingest screen over an empty arrival batch
+    def screen(batch: DataFrame => DataFrame) = S.semanticScreenFrom(
+      batch(S.embeddingsWithNorm(spark, TestSpark.sf)),
+      S.assignmentTable(spark, TestSpark.sf),
+      S.centroidArtifact(S.trainCentroids(spark, TestSpark.sf, iters = 2)))
     Seq(
       R.bm25Search(spark, TestSpark.sf, Seq()) -> R.bm25Search(spark, TestSpark.sf),
       R.bm25Batch(spark, TestSpark.sf, Seq()) -> R.bm25Batch(spark, TestSpark.sf),
       S.probedTopKForIds(spark, TestSpark.sf, Seq()) ->
-        S.probedTopKForIds(spark, TestSpark.sf, Seq(1L))
+        S.probedTopKForIds(spark, TestSpark.sf, Seq(1L)),
+      screen(_.limit(0)) -> screen(identity)
     ).foreach { case (empty, normal) =>
       assert(empty.schema === normal.schema)
       assert(empty.collect().isEmpty)
