@@ -73,6 +73,14 @@ object KillProbe {
     concat(lit("updated body payload variant "),
       (col("doc_id") % 7).cast("string"))
 
+  /** Seed a churn-schema serving index: `rows` stamped U at seq -1
+    * (below every stream batch id, so streamed rows supersede them),
+    * bucketed on `bucketCol` — the setup of every loop family. */
+  private def seedIndex(spark: SparkSession, table: String, rows: DataFrame,
+      bucketCol: String): Unit =
+    graft.sources.Bucketing.ensureBucketedTable(spark, table,
+      graft.sources.IndexChurn.stamp(rows, "U", -1L), Seq(bucketCol))()
+
   /** BM25 doc lengths, same payload as churnIngestLoop's dl table. */
   private def doclensOf(docs: DataFrame): DataFrame = {
     import graft.functions.{TextFunctions => T}
@@ -98,18 +106,12 @@ object KillProbe {
           .parquet(s"$work/corpus/documents.parquet")
         Bucketing.ensureBandIndexFrom(spark, bandTable,
           Dedup.minhashCappedBands(spark, sf).filter(corpusPred))
-        IndexChurn.stamp(
-            Retrieval.postingsTable(spark, sf).filter(corpusPred), "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "token").sortBy("token")
-          .saveAsTable(postTable)
+        seedIndex(spark, postTable,
+          Retrieval.postingsTable(spark, sf).filter(corpusPred), "token")
         val streamedIds = docs.filter(!corpusPred)
           .select(col("doc_id").as("vec_id"))
-        IndexChurn.stamp(
-            Similarity.assignVectors(
-              emb.join(streamedIds, Seq("vec_id"), "left_anti"), centroids),
-            "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "c_id").sortBy("c_id")
-          .saveAsTable(assignTable)
+        seedIndex(spark, assignTable, Similarity.assignVectors(
+          emb.join(streamedIds, Seq("vec_id"), "left_anti"), centroids), "c_id")
         // one single-file batch per modulus slice, mtime-ordered so the
         // file source delivers them deterministically
         (0 until Batches).foreach { i =>
@@ -181,15 +183,11 @@ object KillProbe {
       // so the check's want-model is pure arithmetic and every batch
       // carries both tombstones and supersedes.
       case "churn-setup" =>
-        IndexChurn.stamp(Retrieval.postingsTable(spark, sf), "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "token").sortBy("token")
-          .saveAsTable(churnPostTable)
-        IndexChurn.stamp(doclensOf(docs), "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "doc_id").sortBy("doc_id")
-          .saveAsTable(churnDlTable)
-        IndexChurn.stamp(Similarity.assignVectors(emb, centroids), "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "c_id").sortBy("c_id")
-          .saveAsTable(churnAssignTable)
+        seedIndex(spark, churnPostTable, Retrieval.postingsTable(spark, sf),
+          "token")
+        seedIndex(spark, churnDlTable, doclensOf(docs), "doc_id")
+        seedIndex(spark, churnAssignTable,
+          Similarity.assignVectors(emb, centroids), "c_id")
         (0 until ChurnBatches).foreach { i =>
           val slot = docs.filter((col("doc_id") % (2 * ChurnBatches))
             .isin(2 * i, 2 * i + 1))
@@ -268,10 +266,8 @@ object KillProbe {
       // SIGKILLs: the graph grows from nothing over GraphWaves arrival
       // waves; end state must hash-equal the batch knnGraph.
       case "graph-setup" =>
-        IndexChurn.stamp(
-            Similarity.assignVectors(emb.limit(0), centroids), "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "c_id").sortBy("c_id")
-          .saveAsTable(graphAssignTable)
+        seedIndex(spark, graphAssignTable,
+          Similarity.assignVectors(emb.limit(0), centroids), "c_id")
         val embRaw = Tables.load(spark, sf, "embeddings")
         (0 until GraphWaves).foreach { w =>
           val sub = s"$work/stream/b$w"
@@ -313,10 +309,8 @@ object KillProbe {
       // delete set (vec_id % 10 == 0) streamed over GchurnWaves waves;
       // end state must hash-equal the batch knnGraphChurn.
       case "gchurn-setup" =>
-        IndexChurn.stamp(
-            Similarity.assignVectors(emb.limit(0), centroids), "U", -1L)
-          .write.mode("overwrite").bucketBy(8, "c_id").sortBy("c_id")
-          .saveAsTable(graphAssignTable)
+        seedIndex(spark, graphAssignTable,
+          Similarity.assignVectors(emb.limit(0), centroids), "c_id")
         val embRaw = Tables.load(spark, sf, "embeddings")
         embRaw.coalesce(1).write.mode("overwrite")
           .parquet(s"$work/ingest/all")

@@ -30,27 +30,4 @@ object Vectors {
 
   /** Cast an `array<float>` column to `array<double>` for exact math. */
   def asDouble(a: Column): Column = a.cast("array<double>")
-
-  /** Signed random-hyperplane LSH signature of `bits` bits.
-    *
-    * Plane p's i-th coefficient is a deterministic pseudo-random value in
-    * [-1, 1) derived from xxhash64(p, i) — reproducible across runs and
-    * engines, no stored plane matrix to ship. Bit p = sign of the
-    * projection. Cosine-similar vectors agree on most bits, so equal
-    * signatures (or near-equal, under banding) are near-dup candidates —
-    * this is the O(n) scale path replacing O(n²) all-pairs cosine.
-    */
-  def hyperplaneSignature(vec: Column, bits: Int): Column = {
-    val proj = (p: Column) => aggregate(
-      zip_with(vec, sequence(lit(0), size(vec) - 1),
-        (x, i) => x * ((pmod(xxhash64(p, i), lit(2000001L)) - 1000000L)
-          .cast("double") / 1e6)),
-      lit(0.0d), (acc, x) => acc + x)
-    transform(sequence(lit(0), lit(bits - 1)),
-      p => when(proj(p) >= 0, lit(1)).otherwise(lit(0)))
-  }
-
-  /** Pack a 0/1 bit array (≤ 63 bits) into a long bucket id. */
-  def packBits(bits: Column): Column =
-    aggregate(bits, lit(0L), (acc, b) => acc * 2 + b)
 }

@@ -301,7 +301,7 @@ object Dedup {
     * (doc_id % 10 == 0 is the "new crawl"); production swaps the
     * predicate for a batch-id column and appends the verified new
     * docs' bands back into the corpus index afterwards
-    * ([[graft.sources.Bucketing.appendToBandIndex]] — no rebuild). */
+    * ([[graft.sources.Bucketing.append]] — no rebuild). */
   def incrementalPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.5, maxBucket: Int = 200): DataFrame = {
     // the capped band table is a memoized parquet — the increment pays

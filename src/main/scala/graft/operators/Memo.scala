@@ -30,7 +30,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `DataFrame.write.parquet`). Unset, it falls back to a local temp
   * directory — correct for local[N] and tests. All memo directories
   * are removed by a best-effort JVM shutdown hook (Hadoop FS delete,
-  * so the conf-rooted ones clean up too).
+  * so the conf-rooted ones clean up too); local ones that a killed JVM
+  * left behind are swept by the next JVM ([[sweepOrphans]]).
   */
 object Memo {
 
@@ -123,13 +124,57 @@ object Memo {
 
   /** Resolve a fresh materialization directory for one memo table:
     * under [[RootConf]] when set (shared-FS path for clusters), else a
-    * local temp directory. */
+    * local temp directory named for its owner (see [[orphansSwept]]). */
   private def newPath(spark: SparkSession, name: String): String =
     spark.conf.getOption(RootConf) match {
       case Some(root) =>
         s"${root.stripSuffix("/")}/graft-memo-$name-${java.util.UUID.randomUUID()}"
-      case None => Files.createTempDirectory(s"graft-memo-$name-").toString
+      case None =>
+        orphansSwept
+        Files.createTempDirectory(s"graft-memo-$name$ownerTag-").toString
     }
+
+  /** pid and start instant (epoch ms) of a JVM; together they name one
+    * process even after the OS reuses its pid. */
+  private def owner(p: ProcessHandle): Option[(Long, Long)] = {
+    val start = p.info().startInstant()
+    if (start.isPresent) Some((p.pid(), start.get.toEpochMilli)) else None
+  }
+
+  /** Local directories are `graft-memo-<name>.o<pid>.<start>-<random>`,
+    * so a later JVM can tell whether their owner is still alive. */
+  private lazy val ownerTag: String =
+    owner(ProcessHandle.current()).fold("") {
+      case (pid, start) => s".o$pid.$start"
+    }
+
+  private val OwnedDir = "graft-memo-.*\\.o(\\d+)\\.(\\d+)-\\d+".r
+
+  /** Delete the local memo and scratch directories of JVMs that are no
+    * longer alive. The cleanup of a JVM is a shutdown hook, which a
+    * SIGKILL skips, so a killed JVM leaves its directories in
+    * `java.io.tmpdir` for good. A directory is removed only when its
+    * name carries an owner and no live process has that pid and start
+    * instant; unowned names, a live JVM's directories and
+    * [[RootConf]] paths are never touched. */
+  private[graft] def sweepOrphans(): Unit = {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    Option(tmp.listFiles()).getOrElse(Array.empty).foreach { d =>
+      d.getName match {
+        case OwnedDir(pid, start) if d.isDirectory =>
+          val alive = ProcessHandle.of(pid.toLong).map[Boolean](p =>
+            p.isAlive && owner(p).forall(_._2 == start.toLong)).orElse(false)
+          if (!alive)
+            try org.apache.commons.io.FileUtils.deleteDirectory(d)
+            catch { case scala.util.control.NonFatal(_) => () }
+        case _ => ()
+      }
+    }
+  }
+
+  /** Runs [[sweepOrphans]] once per JVM, before the first local memo
+    * path; a lazy val, so concurrent first builds sweep only once. */
+  private lazy val orphansSwept: Unit = sweepOrphans()
 
   /** Materialize a ONE-OFF intermediate to a fresh parquet path — NOT
     * memoized, every call writes anew. For per-batch intermediates

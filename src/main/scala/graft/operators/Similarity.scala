@@ -774,12 +774,12 @@ object Similarity {
     * unchanged after the retrain, and the retrained index hash-equals
     * a fresh full build with the new centroids. */
   def retrainAssignmentIndex(spark: SparkSession, dir: String,
-      oldIters: Int = 2, newIters: Int = 3, buckets: Int = 8): String = {
+      oldIters: Int = 2, newIters: Int = 3): String = {
     val oldTable = graft.sources.Bucketing
       .ensureMaintainedAssignmentIndex(spark, dir, oldIters)
     val newTable =
       graft.sources.Bucketing.maintainedAssignmentTableName(dir, newIters)
-    retrainFrom(spark, dir, oldTable, newTable, newIters, buckets)
+    retrainFrom(spark, dir, oldTable, newTable, newIters)
   }
 
   /** The retrain kernel, decoupled from the maintained-table naming so
@@ -798,7 +798,7 @@ object Similarity {
   // index's SERVE VIEW instead, or deleted regions keep attracting
   // centroids — the assignment side below already reads survivors only.
   def retrainFrom(spark: SparkSession, dir: String, oldTable: String,
-      newTable: String, newIters: Int, buckets: Int = 8): String = {
+      newTable: String, newIters: Int): String = {
     val newCentroids = trainCentroids(spark, dir, iters = newIters)
     val raw = spark.table(oldTable)
     val vectors = (if (raw.columns.contains("op"))
@@ -807,7 +807,7 @@ object Similarity {
     graft.sources.Bucketing.ensureBucketedTable(spark, newTable,
       assignNearest(vectors, newCentroids)
         .select("vec_id", "c_id", "v", "nrm"),
-      Seq("c_id"), buckets,
+      Seq("c_id"),
       Some(graft.sources.SourceState.fingerprint(spark, dir,
         Seq("embeddings"))))()
     newTable

@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.Shim
 
 /** Churn (delete/update) support for the maintained bucketed serving
   * indexes — the missing half of the append-only growth story in
@@ -91,12 +93,11 @@ object IndexChurn {
     * [[rebucket]] the count CHANGES, and a stale constant would make
     * [[compact]] map rows to the wrong bucket ids — missing dirty
     * buckets while rewriting clean ones (still serve-consistent, but
-    * debt never clears) — or make [[append]] fail the writer's
-    * spec-match check. Self-describing beats remembering. */
+    * debt never clears). Self-describing beats remembering; [[append]]
+    * reads the whole spec the same way. */
   def bucketCountOf(spark: SparkSession, table: String): Int =
-    spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .filter(col("col_name") === "Num Buckets")
-      .head().getString(1).trim.toInt
+    Shim.catalogTable(spark, table).bucketSpec
+      .getOrElse(sys.error(s"$table is not bucketed")).numBuckets
 
   private def resolveBuckets(spark: SparkSession, table: String,
       buckets: Int): Int =
@@ -110,17 +111,11 @@ object IndexChurn {
     * contract; on a seq tie the serve view lets the tombstone win, and
     * [[winnersOf]]'s row-hash tiebreak makes even a same-op tie pick
     * one winner reproducibly — a violated contract fails
-    * deterministically, not randomly). */
+    * deterministically, not randomly). The bucket spec and column order
+    * come from the catalog ([[Bucketing.append]]). */
   def append(spark: SparkSession, table: String, payload: DataFrame,
-      op: String, seq: Long, bucketCols: Seq[String], buckets: Int = -1): Unit = {
-    val b = resolveBuckets(spark, table, buckets)
-    val cols = spark.table(table).columns
-    stamp(payload, op, seq).select(cols.head, cols.tail: _*)
-      .write.mode("append")
-      .bucketBy(b, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
-  }
+      op: String, seq: Long): Unit =
+    Bucketing.append(spark, table, stamp(payload, op, seq))
 
   /** The serving read: latest seq per key wins (tombstones win seq
     * ties — 'D' < 'U' so `op` ascending puts the delete first), winning
@@ -221,10 +216,8 @@ object IndexChurn {
     // compactions could then move each other's winner files
     val stg = s"${table}__compact"
     spark.sql(s"DROP TABLE IF EXISTS $stg")
-    winners.write.mode("overwrite")
-      .bucketBy(b, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(stg)
+    Bucketing.write(winners, stg, "overwrite",
+      BucketSpec(b, bucketCols, bucketCols))
     val stgLoc = tableLocation(spark, stg)
     dataFiles(fs, stgLoc).map(_.getPath).foreach { p =>
       val dst = new org.apache.hadoop.fs.Path(loc, p.getName)
@@ -310,11 +303,8 @@ object IndexChurn {
     val stg = s"${table}__rebucket"
     val retired = s"${table}__retired"
     spark.sql(s"DROP TABLE IF EXISTS $stg")
-    winnersOf(spark.table(table), keyCols)
-      .write.mode("overwrite")
-      .bucketBy(newBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(stg)
+    Bucketing.write(winnersOf(spark.table(table), keyCols), stg, "overwrite",
+      BucketSpec(newBuckets, bucketCols, bucketCols))
     spark.sql(s"DROP TABLE IF EXISTS $retired")
     spark.sql(s"ALTER TABLE $table RENAME TO $retired")
     spark.sql(s"ALTER TABLE $stg RENAME TO $table")
@@ -367,10 +357,7 @@ object IndexChurn {
   /** Resolved storage location of a catalog table. */
   private def tableLocation(spark: SparkSession,
       table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-        .filter(col("col_name") === "Location")
-        .head().getString(1))
+    new org.apache.hadoop.fs.Path(Shim.catalogTable(spark, table).location)
 
   /** Visible data files of a bucketed table directory, WITH their
     * statuses (one listing serves both paths and sizes). */

@@ -301,7 +301,7 @@ object StreamingBackfill {
       s"$corpusDir/_band_batch_$batchId")
     val mfs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!mfs.exists(marker)) {
-      graft.sources.Bucketing.appendToBandIndex(s, bandIndexTable, bands)
+      graft.sources.Bucketing.append(s, bandIndexTable, bands)
       mfs.create(marker, true).close()
     }
   }
@@ -342,9 +342,9 @@ object StreamingBackfill {
     * (token, doc_id, tf) rows and append them into the CHURN-schema
     * index ([[graft.sources.IndexChurn]]) with `seq = batchId`. */
   def appendPostingsBatch(spark: SparkSession, indexTable: String,
-      batch: DataFrame, batchId: Long, buckets: Int = -1): Unit =
+      batch: DataFrame, batchId: Long): Unit =
     graft.sources.IndexChurn.append(spark, indexTable, postingsOf(batch),
-      "U", batchId, Seq("token"), buckets)
+      "U", batchId)
 
   /** Streaming postings-index maintenance — the retrieval-side twin of
     * [[ingestDedupLoop]]: each microbatch of new documents appends its
@@ -366,13 +366,13 @@ object StreamingBackfill {
     * supersede on key collisions. Doc deletes and updates ride the
     * dedicated [[churnIngestLoop]] (tombstone batches, `op='D'`). */
   def indexMaintenanceLoop(spark: SparkSession, newDocs: DataFrame,
-      indexTable: String, buckets: Int = -1): Unit = {
+      indexTable: String): Unit = {
     val q = newDocs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
         if (!batch.isEmpty)
           appendPostingsBatch(batch.sparkSession, indexTable,
-            batch.toDF(), id, buckets)
+            batch.toDF(), id)
       }
       .trigger(Trigger.ProcessingTime(0))
       .start()
@@ -421,7 +421,7 @@ object StreamingBackfill {
       corpusDir: String, bandIndexTable: String, postingsIndexTable: String,
       assignIndexTable: String, centroids: DataFrame,
       embedder: DataFrame => DataFrame, outDir: String,
-      threshold: Double = 0.5, buckets: Int = 8,
+      threshold: Double = 0.5,
       simThreshold: Double = 0.40, checkpointDir: String = ""): Unit = {
     import graft.operators.{Dedup, Memo, Similarity}
     import graft.sources.{Bucketing, IndexChurn}
@@ -448,7 +448,7 @@ object StreamingBackfill {
           // curation columns at ingest latency — batch-keyed overwrite,
           // so redelivery rewrites rather than doubles
           growCuration(s, corpusDir, docs, id)
-          appendPostingsBatch(s, postingsIndexTable, docs, id, buckets)
+          appendPostingsBatch(s, postingsIndexTable, docs, id)
           // the embedder (the embedding model in production) runs ONCE:
           // uncached, the screen write and the index append would each
           // re-execute it — the most expensive step of the loop. Scoped
@@ -472,7 +472,7 @@ object StreamingBackfill {
               .write.mode("overwrite").parquet(s"$outDir/semscreen/batch_id=$id")
             IndexChurn.append(s, assignIndexTable,
               Similarity.assignVectors(vecs, centroids),
-              "U", id, Seq("c_id"), buckets)
+              "U", id)
           }
         }
       }
@@ -523,7 +523,11 @@ object StreamingBackfill {
     * a max(seq) read, so a checkpoint-resumed churn stream re-derives
     * byte-identical rows. One table still takes ONE writer scheme at a
     * time (the single-writer contract); the base only orders the
-    * schemes' DOMAINS so grow-then-retract works. */
+    * schemes' DOMAINS so grow-then-retract works.
+    *
+    * `buckets` is not read: every append takes its table's bucket spec
+    * from the catalog ([[graft.sources.Bucketing.append]]). The
+    * parameter stays so existing callers keep compiling. */
   def applyChurnBatch(spark: SparkSession, postingsTable: String,
       assignTable: String, centroids: DataFrame,
       embedder: DataFrame => DataFrame, ops: DataFrame, batchId: Long,
@@ -540,13 +544,12 @@ object StreamingBackfill {
         size(T.tokens(col("text"))).cast("long").as("dl"))
     def side(slice: DataFrame, op: String, seq: Long): Unit =
       if (!slice.isEmpty) {
-        IndexChurn.append(spark, postingsTable, postingsOf(slice),
-          op, seq, Seq("token"), buckets)
+        IndexChurn.append(spark, postingsTable, postingsOf(slice), op, seq)
         doclenTable.foreach(dt => IndexChurn.append(spark, dt,
-          doclensOf(slice), op, seq, Seq("doc_id"), buckets))
+          doclensOf(slice), op, seq))
         IndexChurn.append(spark, assignTable,
           Similarity.assignVectors(embedder(slice), centroids),
-          op, seq, Seq("c_id"), buckets)
+          op, seq)
       }
     side(ops.filter(col("op") === "D").drop("op"), "D",
       seqBase + 2 * batchId)
@@ -920,7 +923,7 @@ object StreamingBackfill {
     * row-mixed serve, but the loser's work is silently discarded. */
   def graphIngestLoop(spark: SparkSession, newVecs: DataFrame,
       assignIndexTable: String, centroids: DataFrame, graphDir: String,
-      k: Int = 3, nprobe: Int = 4, buckets: Int = 8,
+      k: Int = 3, nprobe: Int = 4,
       compactEvery: Int = 0, checkpointDir: String = ""): Unit = {
     import graft.operators.{Memo, Similarity}
     import graft.sources.IndexChurn
@@ -972,8 +975,7 @@ object StreamingBackfill {
               fs.create(marker, true).close()
               ()
             }
-            IndexChurn.append(s, assignIndexTable, batchIdx, "U", id,
-              Seq("c_id"), buckets)
+            IndexChurn.append(s, assignIndexTable, batchIdx, "U", id)
           }
           // debt-gated maintenance tick (the graph twin of
           // churnIngestLoop's compactIfNeeded): the delta store grows
@@ -1031,7 +1033,7 @@ object StreamingBackfill {
     * concurrently against one store. */
   def graphChurnLoop(spark: SparkSession, deletes: DataFrame,
       assignIndexTable: String, centroids: DataFrame, graphDir: String,
-      k: Int = 3, nprobe: Int = 4, buckets: Int = 8,
+      k: Int = 3, nprobe: Int = 4,
       seqBase: Long = ChurnSeqBase, checkpointDir: String = ""): Unit = {
     import graft.operators.{Memo, Similarity}
     import graft.sources.IndexChurn
@@ -1055,8 +1057,7 @@ object StreamingBackfill {
             // the ASSIGNMENT index keeps the 2^40 churn seq domain (its
             // grow side appends at raw batch ids); the GRAPH delta seq
             // is monotone per store — see nextGraphSeq
-            IndexChurn.append(s, assignIndexTable, delIdx, "D", seqBase + id,
-              Seq("c_id"), buckets)
+            IndexChurn.append(s, assignIndexTable, delIdx, "D", seqBase + id)
             val (fs, _) = graphFs(s, graphDir)
             val deltaDir = new org.apache.hadoop.fs.Path(
               s"$graphDir/churn_id=$id")

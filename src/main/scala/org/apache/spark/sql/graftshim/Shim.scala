@@ -43,9 +43,6 @@ object Shim {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.executedPlan
 
-  /** Block until the async listener bus has delivered all queued events
-    * (`LiveListenerBus.waitUntilEmpty` is private[spark]) — needed to
-    * snapshot listener-fed metrics right after an action returns. */
   /** Free the storage blocks behind a `localCheckpoint()`ed Dataset.
     * `Dataset.unpersist` is a CacheManager operation and a NO-OP for
     * checkpoint blocks (they are persisted directly on the underlying
@@ -76,23 +73,28 @@ object Shim {
     root(df.queryExecution.analyzed)
   }
 
+  /** Block until the async listener bus has delivered all queued events
+    * (`LiveListenerBus.waitUntilEmpty` is private[spark]) — needed to
+    * snapshot listener-fed metrics right after an action returns. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A table's catalog metadata — its properties, `bucketSpec`,
+    * location and schema (`getTableMetadata` is behind the private[sql]
+    * session state). `table` may be database-qualified. */
+  def catalogTable(spark: SparkSession, table: String)
+      : org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    state.catalog.getTableMetadata(
+      state.sqlParser.parseTableIdentifier(table))
+  }
 
   /** The catalog-resolved default managed-table location for `table`
     * in the CURRENT database (`SessionCatalog.defaultTablePath` is
     * private[sql]) — "<warehouse>/<db>.db/<table>" when the session
     * database is not `default`, which a hardcoded warehouse join gets
     * wrong. */
-  /** A catalog table property, if set (`getTableMetadata` is behind
-    * the private[sql] session state). */
-  def tableProperty(spark: SparkSession, table: String,
-      key: String): Option[String] =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.get(key)
-
   def defaultTablePath(spark: SparkSession, table: String): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog

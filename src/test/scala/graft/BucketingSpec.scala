@@ -11,7 +11,7 @@ class BucketingSpec extends AnyFunSuite {
   test("bucketed join runs with zero exchanges and matches plain join") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      Bucketing.writeBucketed(spark, sf, buckets = 8)
+      Bucketing.writeBucketed(spark, sf)
       val joined = Bucketing.colocatedJoin(spark)
       val n = joined.count()
       val plan = Shim.executedPlan(joined).toString
@@ -32,10 +32,10 @@ class BucketingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      Bucketing.writeBandIndexBucketed(spark, sf, buckets = 8)
+      val table = Bucketing.ensureCorpusBandIndex(spark, sf)
       val newBands = graft.operators.Dedup.minhashCappedBands(spark, sf)
         .filter(col("doc_id") % 10 === 0)
-      val probe = Bucketing.incrementalProbeColocated(spark, newBands)
+      val probe = Bucketing.incrementalProbeColocated(spark, newBands, table)
       val plan = Shim.executedPlan(probe).toString
       // at most ONE shuffle — the (small) new side aligning to the
       // corpus index's bucketing; the corpus side itself must not move
@@ -51,10 +51,7 @@ class BucketingSpec extends AnyFunSuite {
         .select("doc_id", "corpus_id").distinct().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got.filter { case (n, c) => c % 10 != 0 } == want)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS corpus_bands_bkt")
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("semantic dedup sweep over the maintained index: zero hash exchange") {
@@ -108,7 +105,7 @@ class BucketingSpec extends AnyFunSuite {
           .map(f => (f.getName, f.length())).toSet
       }
       val preFiles = files()
-      Bucketing.appendToBandIndex(spark, table, bandsA)
+      Bucketing.append(spark, table, bandsA)
       val postFiles = files()
       assert(preFiles.subsetOf(postFiles),
         s"append rewrote existing index files: ${preFiles.diff(postFiles)}")
@@ -145,8 +142,7 @@ class BucketingSpec extends AnyFunSuite {
           .map(f => (f.getName, f.length())).toSet
       }
       val preFiles = files()
-      Bucketing.appendToPostingsIndex(spark, table,
-        posts.filter(col("doc_id") % 10 === 0))
+      Bucketing.append(spark, table, posts.filter(col("doc_id") % 10 === 0))
       val postFiles = files()
       assert(preFiles.subsetOf(postFiles),
         s"append rewrote existing index files: ${preFiles.diff(postFiles)}")
@@ -186,8 +182,9 @@ class BucketingSpec extends AnyFunSuite {
         .union(spark.range(2000)
           .select(concat(lit("t"), col("id") % 200).as("token"),
             col("id").as("doc_id"), lit(1L).as("tf")))
-      graft.sources.Bucketing.writeSaltedPostingsIndex(
-        spark, salted, posts, hotDf = 100, salts = 8)
+      Bucketing.ensureBucketedTable(spark, salted,
+        Bucketing.hotSharded(spark, salted, posts, hotDf = 100),
+        Seq("shard_key"))()
       posts.write.mode("overwrite")
         .bucketBy(8, "token").sortBy("token").saveAsTable(plain)
       // only the stopword crossed the df threshold
@@ -238,8 +235,8 @@ class BucketingSpec extends AnyFunSuite {
         .union(spark.range(2000, 2100)
           .select(lit("t5").as("token"), col("id").as("doc_id"),
             lit(1L).as("tf")))
-      graft.sources.Bucketing.appendToSaltedPostingsIndex(
-        spark, salted, newPosts, salts = 8)
+      Bucketing.append(spark, salted,
+        Bucketing.saltedShards(spark, salted, newPosts))
       val got2 = graft.sources.Bucketing
         .saltedPostings(spark, salted, Seq("the", "t5"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -269,8 +266,9 @@ class BucketingSpec extends AnyFunSuite {
         .union(spark.range(9000, 9010)
           .select(lit("the#3").as("token"), col("id").as("doc_id"),
             lit(1L).as("tf")))
-      graft.sources.Bucketing.writeSaltedPostingsIndex(
-        spark, salted, posts, hotDf = 100, salts = 8)
+      Bucketing.ensureBucketedTable(spark, salted,
+        Bucketing.hotSharded(spark, salted, posts, hotDf = 100),
+        Seq("shard_key"))()
       // serving the hot token must NOT pick up the impostor's postings
       val hotServe = graft.sources.Bucketing
         .saltedPostings(spark, salted, Seq("the"))
@@ -292,32 +290,79 @@ class BucketingSpec extends AnyFunSuite {
   test("ensureBucketedTable crash window: partial __building leftover is discarded") {
     import org.apache.spark.sql.functions.col
     val posts = graft.operators.Retrieval.postingsTable(spark, sf)
-    val table = "postings_crash_t"
-    val tmp = s"${table}__building"
-    try {
-      // simulate the crash the advisor flagged: the build committed the
-      // corpus slice under the temp name but the JVM died before the
-      // increment append + rename — nothing exists under the final name
-      posts.filter(col("doc_id") % 10 =!= 0)
-        .write.mode("overwrite").bucketBy(8, "token").sortBy("token")
-        .saveAsTable(tmp)
-      assert(!spark.catalog.tableExists(table))
-      // the next ensure call must not adopt the partial temp table: it
-      // rebuilds from scratch and only the fully-appended index gets
-      // the final name
-      Bucketing.ensureBucketedTable(spark, table,
-        posts.filter(col("doc_id") % 10 =!= 0), Seq("token")) { t =>
-        Bucketing.appendToPostingsIndex(spark, t,
-          posts.filter(col("doc_id") % 10 === 0))
+    // two builds: the maintained fold (corpus slice, then the increment
+    // appended inside the guard) and the salted build (hot companion
+    // written, rows shard-keyed under it)
+    val builds = Seq[(String, String => Unit)](
+      "postings_crash_t" -> { t =>
+        Bucketing.ensureBucketedTable(spark, t,
+            posts.filter(col("doc_id") % 10 =!= 0), Seq("token"),
+            Some("fp-crash")) { tmp =>
+          Bucketing.append(spark, tmp, posts.filter(col("doc_id") % 10 === 0))
+        }
+      },
+      "salted_crash_t" -> { t =>
+        Bucketing.ensureBucketedTable(spark, t,
+          Bucketing.hotSharded(spark, t, posts, hotDf = 10), Seq("shard_key"),
+          Some("fp-crash"))()
+      })
+    for ((table, build) <- builds) {
+      val tmp = s"${table}__building"
+      try {
+        // simulate the crash: the build committed the corpus slice under
+        // the temp name but the JVM died before the append + rename —
+        // nothing exists under the final name
+        posts.filter(col("doc_id") % 10 =!= 0)
+          .write.mode("overwrite").bucketBy(8, "token").sortBy("token")
+          .saveAsTable(tmp)
+        assert(!spark.catalog.tableExists(table))
+        // the next ensure call must not adopt the partial temp table: it
+        // rebuilds from scratch and only the complete index gets the
+        // final name, fingerprint already stamped
+        build(table)
+        assert(spark.catalog.tableExists(table))
+        assert(!spark.catalog.tableExists(tmp), "temp table outlived the rename")
+        assert(Shim.catalogTable(spark, table).properties
+          .get(Bucketing.FingerprintProp).contains("fp-crash"),
+          s"$table exists without its fingerprint")
+        assert(spark.table(table).count() === posts.count(),
+          s"healed $table is missing rows — partial build was served")
+      } finally {
+        Seq(table, tmp, s"${table}_hot")
+          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       }
-      assert(spark.catalog.tableExists(table))
-      assert(!spark.catalog.tableExists(tmp), "temp table outlived the rename")
-      assert(spark.table(table).count() === posts.count(),
-        "healed index is missing the increment — partial build was served")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS $tmp")
     }
+  }
+
+  test("append takes column order and bucket spec from the catalog") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    import graft.sources.IndexChurn
+    val table = "append_spec_t"
+    try {
+      // 4 buckets on doc_id — neither the module's count nor a token
+      // bucketing — and a column order the appended frame does not share
+      Seq((1L, "t1", 1L)).toDF("doc_id", "token", "tf")
+        .write.mode("overwrite").bucketBy(4, "doc_id").sortBy("doc_id")
+        .saveAsTable(table)
+      Bucketing.append(spark, table, (2L to 200L)
+        .map(i => (s"t${i % 7}", i, i % 3)).toDF("token", "doc_id", "tf"))
+      assert(IndexChurn.bucketCountOf(spark, table) === 4)
+      val rows = spark.table(table)
+        .select(col("doc_id"), col("token"), col("tf"),
+          IndexChurn.bucketIdExpr(Seq(col("doc_id")), 4).as("want"),
+          input_file_name().as("file"))
+        .collect()
+      assert(rows.length === 200)
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        assert((r.getString(1), r.getLong(2)) === ((s"t${id % 7}", id % 3)))
+        val got = IndexChurn.bucketOfFile(
+          new org.apache.hadoop.fs.Path(r.getString(4)).getName)
+        assert(got.contains(r.getInt(3)),
+          s"doc $id landed in bucket $got, bucketIdExpr predicts ${r.getInt(3)}")
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("source fingerprint: in-place dataset rewrite rebuilds the index; " +
@@ -357,80 +402,6 @@ class BucketingSpec extends AnyFunSuite {
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
-  }
-
-  test("saltedFilter salts fallback: a property-less table recovers the " +
-      "shard count from its name (crash window between rename and ALTER)") {
-    import org.apache.spark.sql.functions._
-    // salts=16 > the parameter default of 8: if the fallback ignored
-    // the name and used the default, shard keys the#8..the#15 would
-    // never be enumerated and the hot token would silently lose half
-    // its postings on every scan
-    // the builder convention's shape: `_salt_<n>_<12-hex dirTag>$` —
-    // the fallback regex is anchored to exactly this, so the tag here
-    // must look like a real dirTag
-    val salted = "postings_salt_16_0123456789ab"
-    try {
-      val posts = spark.range(500)
-        .select(lit("the").as("token"), col("id").as("doc_id"),
-          lit(5L).as("tf"))
-        .union(spark.range(500)
-          .select(concat(lit("t"), col("id") % 50).as("token"),
-            col("id").as("doc_id"), lit(1L).as("tf")))
-      Bucketing.writeSaltedPostingsIndex(
-        spark, salted, posts, hotDf = 100, salts = 16)
-      // simulate the crash: the table became visible but the identity
-      // property was never stamped
-      spark.sql(s"ALTER TABLE $salted UNSET TBLPROPERTIES " +
-        s"('${Bucketing.SaltsProp}')")
-      assert(Shim.tableProperty(spark, salted, Bucketing.SaltsProp).isEmpty)
-      val got = Bucketing.saltedPostings(spark, salted, Seq("the", "t5"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      val want = posts.filter(col("token").isin("the", "t5"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      assert(got === want,
-        "name-derived salts fallback dropped hot-token shards")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $salted")
-      spark.sql(s"DROP TABLE IF EXISTS ${salted}_hot")
-    }
-  }
-
-  test("saltedFilter salts fallback: a coincidental '_salt_<n>_' inside " +
-      "an EXTERNALLY-named table must NOT override the explicit " +
-      "parameter (regex anchored to the builder convention)") {
-    import org.apache.spark.sql.functions._
-    // external name whose middle coincidentally contains _salt_2_ —
-    // the un-anchored fallback would derive salts=2 and enumerate only
-    // shards the#0..the#1, silently dropping 14 of the 16 real shards
-    val salted = "ext_salt_2_corpus_postings"
-    try {
-      val posts = spark.range(500)
-        .select(lit("the").as("token"), col("id").as("doc_id"),
-          lit(5L).as("tf"))
-        .union(spark.range(500)
-          .select(concat(lit("t"), col("id") % 50).as("token"),
-            col("id").as("doc_id"), lit(1L).as("tf")))
-      Bucketing.writeSaltedPostingsIndex(
-        spark, salted, posts, hotDf = 100, salts = 16)
-      spark.sql(s"ALTER TABLE $salted UNSET TBLPROPERTIES " +
-        s"('${Bucketing.SaltsProp}')")
-      val got = Bucketing.saltedFilter(spark, salted, Seq("the", "t5"),
-          saltsFallback = 16)
-        .select("token", "doc_id", "tf")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      val want = posts.filter(col("token").isin("the", "t5"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      assert(got === want,
-        "coincidental name match overrode the explicit salts parameter")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $salted")
-      spark.sql(s"DROP TABLE IF EXISTS ${salted}_hot")
     }
   }
 

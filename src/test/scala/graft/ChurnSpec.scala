@@ -72,10 +72,10 @@ class ChurnSpec extends AnyFunSuite {
       // seq 1: update (tok1, 1) to tf=5; seq 2: delete (tok2, 2)
       IndexChurn.append(spark, table,
         Seq(("tok1", 1L, 5L)).toDF("token", "doc_id", "tf"),
-        "U", 1L, Seq("token"))
+        "U", 1L)
       IndexChurn.append(spark, table,
         Seq(("tok2", 2L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 2L, Seq("token"))
+        "D", 2L)
       def servedMap() = IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       val s1 = servedMap()
@@ -87,7 +87,7 @@ class ChurnSpec extends AnyFunSuite {
       // the serve view must collapse them, not double anything
       IndexChurn.append(spark, table,
         Seq(("tok1", 1L, 5L)).toDF("token", "doc_id", "tf"),
-        "U", 1L, Seq("token"))
+        "U", 1L)
       assert(servedMap() === s1, "replayed batch changed the serve view")
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
@@ -100,10 +100,10 @@ class ChurnSpec extends AnyFunSuite {
       // churn exactly two keys, both under tok1 — one bucket is dirty
       IndexChurn.append(spark, table,
         Seq(("tok1", 1L, 7L)).toDF("token", "doc_id", "tf"),
-        "U", 1L, Seq("token"))
+        "U", 1L)
       IndexChurn.append(spark, table,
         Seq(("tok1", 21L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 2L, Seq("token"))
+        "D", 2L)
       val dirtyBucket = bucketOf("tok1")
       val pre = files(table)
       val servedPre = IndexChurn.served(spark, table, Seq("token", "doc_id"))
@@ -146,10 +146,10 @@ class ChurnSpec extends AnyFunSuite {
       val updDoc = if (updIdx == 0) 20L else updIdx.toLong // seed key (tokK, K)
       IndexChurn.append(spark, table,
         Seq(("tok2", 2L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 1L, Seq("token"))
+        "D", 1L)
       IndexChurn.append(spark, table,
         Seq((updTok, updDoc, 9L)).toDF("token", "doc_id", "tf"),
-        "U", 2L, Seq("token"))
+        "U", 2L)
       def servedSet() = IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val pre = servedSet()
@@ -189,7 +189,7 @@ class ChurnSpec extends AnyFunSuite {
       seed(table)
       IndexChurn.append(spark, table,
         Seq(("tok4", 4L, 9L)).toDF("token", "doc_id", "tf"),
-        "U", 1L, Seq("token"))
+        "U", 1L)
       val before = IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       // simulate the compaction crash window: the winner rows have been
@@ -197,7 +197,7 @@ class ChurnSpec extends AnyFunSuite {
       // winners exist TWICE. served() must not change.
       IndexChurn.append(spark, table,
         Seq(("tok4", 4L, 9L)).toDF("token", "doc_id", "tf"),
-        "U", 1L, Seq("token"))
+        "U", 1L)
       val during = IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(during === before, "duplicated winners changed the serve view")
@@ -216,7 +216,7 @@ class ChurnSpec extends AnyFunSuite {
       // 2 tombstones = 1% debt: below the 5% default, tick must no-op
       IndexChurn.append(spark, table,
         Seq(("tok1", 1L, 0L), ("tok2", 2L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 1L, Seq("token"))
+        "D", 1L)
       val pre = files(table)
       assert(!IndexChurn.compactIfNeeded(spark, table,
         Seq("token", "doc_id"), Seq("token")), "tick compacted below threshold")
@@ -225,7 +225,7 @@ class ChurnSpec extends AnyFunSuite {
       IndexChurn.append(spark, table,
         (3L to 13L).map(i => (s"tok${i % 20}", i, 0L))
           .toDF("token", "doc_id", "tf"),
-        "D", 2L, Seq("token"))
+        "D", 2L)
       assert(IndexChurn.compactIfNeeded(spark, table,
         Seq("token", "doc_id"), Seq("token")), "tick skipped above threshold")
       assert(spark.table(table).filter(col("op") === "D").count() === 0)
@@ -240,10 +240,10 @@ class ChurnSpec extends AnyFunSuite {
       seed(table)
       IndexChurn.append(spark, table,
         Seq(("tok1", 1L, 7L)).toDF("token", "doc_id", "tf"),
-        "U", 1L, Seq("token"))
+        "U", 1L)
       IndexChurn.append(spark, table,
         Seq(("tok2", 2L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 2L, Seq("token"))
+        "D", 2L)
       def servedSet() = IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val pre = servedSet()
@@ -272,7 +272,7 @@ class ChurnSpec extends AnyFunSuite {
       assert(IndexChurn.bucketCountOf(spark, table) === 16)
       IndexChurn.append(spark, table,
         Seq(("tok3", 3L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 3L, Seq("token"))
+        "D", 3L)
       IndexChurn.compact(spark, table, Seq("token", "doc_id"),
         Seq("token"), tombstonesOnly = true)
       assert(spark.table(table).filter(col("op") === "D").count() === 0,
@@ -330,7 +330,7 @@ class ChurnSpec extends AnyFunSuite {
       seed(table)
       IndexChurn.append(spark, table,
         Seq(("tok5", 5L, 0L)).toDF("token", "doc_id", "tf"),
-        "D", 1L, Seq("token"))
+        "D", 1L)
       val probe = IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .filter(col("token").isin("tok1", "tok2", "tok3"))
         .groupBy("token").agg(count(col("doc_id")).as("df"))

@@ -72,4 +72,38 @@ class MemoSpec extends AnyFunSuite {
     assert(Memo.table(spark, dir, "memo-spec-inner")(fail("must be memoized"))
       .count() == 3)
   }
+
+  test("orphan sweep: a dead owner's memo directory is removed, the live " +
+      "JVM's survives") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def owned(name: String) =
+      tmp.listFiles().filter(_.getName.startsWith(s"graft-memo-$name.o")).toSeq
+    val dir = writeDocs(5, "zeta")
+    assert(Memo.table(spark, dir, "memo-spec-live") {
+      spark.range(2).toDF("id")
+    }.count() == 2)
+    val live = owned("memo-spec-live")
+    assert(live.size == 1, "the live memo directory is not owner-named")
+    // a dead owner: a child process that has exited and been reaped
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val me = ProcessHandle.current()
+    val myStart = me.info().startInstant().get.toEpochMilli
+    def orphan(pid: Long, start: Long, tag: String): java.io.File = {
+      val d = new java.io.File(tmp, s"graft-memo-$tag.o$pid.$start-0")
+      assert(d.mkdirs())
+      java.nio.file.Files.write(new java.io.File(d, "part-0.parquet").toPath,
+        Array[Byte](1, 2, 3))
+      d
+    }
+    val dead = orphan(child.pid(), myStart, "memo-spec-dead")
+    // this JVM's pid under another start instant: a reused pid
+    val reused = orphan(me.pid(), myStart - 60000L, "memo-spec-reused")
+    Memo.sweepOrphans()
+    assert(!dead.exists(), "a dead owner's directory survived the sweep")
+    assert(!reused.exists(), "a reused pid kept a dead owner's directory")
+    assert(live.forall(_.exists()), "the sweep removed a live JVM's directory")
+    assert(Memo.table(spark, dir, "memo-spec-live")(fail("must be memoized"))
+      .count() == 2)
+  }
 }

@@ -492,7 +492,7 @@ class PropertySpec extends AnyFunSuite {
           seq += 1
           IndexChurn.append(spark, table,
             keys.map { case (t, d) => (t, d, tfv) }.toDF("token", "doc_id", "tf"),
-            op, seq, Seq("token"), 4)
+            op, seq)
           ref = if (op == "D") ref -- keys
                 else ref ++ keys.map { case (t, d) => (t, d) -> tfv }
           if (doCompact)

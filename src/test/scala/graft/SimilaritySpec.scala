@@ -75,7 +75,7 @@ class SimilaritySpec extends AnyFunSuite {
           .map(f => (f.getName, f.length())).toSet
       }
       val preFiles = files()
-      graft.sources.Bucketing.appendToAssignmentIndex(spark, table,
+      graft.sources.Bucketing.append(spark, table,
         Similarity.assignSlice(spark, sf, newBatch = true))
       val postFiles = files()
       assert(preFiles.subsetOf(postFiles),

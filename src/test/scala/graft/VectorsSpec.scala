@@ -41,13 +41,4 @@ class VectorsSpec extends AnyFunSuite {
     assert(r.getDouble(0) == 11.0)
     assert(r.isNullAt(1))
   }
-
-  test("hyperplane signature is deterministic and binary") {
-    import spark.implicits._
-    val v = Array.tabulate(16)(i => math.sin(i.toDouble))
-    val df = Seq(v, v).toDF("v").select(
-      V.packBits(V.hyperplaneSignature(col("v"), 8)).as("b")).collect()
-    assert(df(0).getLong(0) == df(1).getLong(0))
-    assert(df(0).getLong(0) >= 0 && df(0).getLong(0) < 256)
-  }
 }
