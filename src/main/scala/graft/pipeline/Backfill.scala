@@ -1,8 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.Tables
+import graft.sources.Jdbc
 
 /** The reference-parity deliverable (SURVEY.md §7 M2): the whole
   * backfill run — reference `main()` EP1 (`src/main.rs:59-321`) — as one
@@ -66,11 +70,24 @@ object Backfill {
       Seq("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
         "l_linestatus", "l_shipdate")))
 
-  /** P2/P3/P4 predicate block: merchant selection + inclusive range. */
-  private def predicates(e: Entity, cfg: Config): Column = {
-    val m = cfg.merchantIds
-      .map(ids => col(e.merchantCol).isin(ids: _*))
-      .getOrElse(lit(true))
+  /** P2/P3/P4 predicate block over `src`: merchant selection +
+    * inclusive range. The merchant set is ONE `InSet` with values of
+    * the column's type (BIGINT or INTEGER; other types fall back to
+    * `isin`): it pushes down as the same `In(col, [...])` and keeps the
+    * same rows as `isin`, without analyzing one literal per merchant
+    * (which `OptimizeIn` then folds into this very `InSet`). */
+  private def predicates(src: DataFrame, e: Entity, cfg: Config): Column = {
+    val m = cfg.merchantIds.map { ids =>
+      val values = src.schema.fields.find(_.name.equalsIgnoreCase(e.merchantCol))
+        .map(_.dataType).collect {
+          case LongType => ids.toSet[Any]
+          // an id outside INT range matches no row, as under `isin`'s
+          // widening of the column to BIGINT
+          case IntegerType => ids.filter(_.isValidInt).map(_.toInt).toSet[Any]
+        }
+      values.fold(col(e.merchantCol).isin(ids: _*))(v =>
+        Shim.column(InSet(Shim.expression(col(e.merchantCol)), v)))
+    }.getOrElse(lit(true))
     // both sides cast to NTZ: comparing an NTZ column against an LTZ
     // literal (plain "timestamp") coerces through the session timezone
     // — boundary rows would move with the host zone (DST gaps make the
@@ -82,6 +99,18 @@ object Backfill {
       .map(s => col(e.timeCol).cast("timestamp_ntz") <=
         lit(s).cast("timestamp_ntz")).getOrElse(lit(true))
     m && lo && hi
+  }
+
+  /** One entity's source scoped to the request, the one path every
+    * feed and mark reads through: a partitioned JDBC source keeps only
+    * the strides the window can touch ([[Jdbc.within]]), then the
+    * [[predicates]] filter (pushed into the generated SQL) selects the
+    * rows. */
+  private def scoped(spark: SparkSession, dir: String, e: Entity,
+      cfg: Config): DataFrame = {
+    val src = Jdbc.within(cfg.source(spark, dir, e), e.timeCol, cfg.start,
+      cfg.end)
+    src.filter(predicates(src, e, cfg))
   }
 
   /** Envelope projection over an already-filtered entity source: a pure
@@ -135,8 +164,7 @@ object Backfill {
     * scan → envelope. */
   private def feedOf(spark: SparkSession, dir: String, e: Entity,
       cfg: Config, tenant: Column): DataFrame =
-    envelope(cfg.source(spark, dir, e).filter(predicates(e, cfg)),
-      e, tenant)
+    envelope(scoped(spark, dir, e, cfg), e, tenant)
 
   /** One entity's event feed under the config's single tenant. */
   def entityFeed(spark: SparkSession, dir: String, e: Entity,
@@ -182,7 +210,11 @@ object Backfill {
 
   /** The consolidated feed: UNION ALL of every entity feed — the
     * `consolidated_events_topic` twin. One job, entities scan in
-    * parallel (the reference serializes them per merchant, X3). */
+    * parallel (the reference serializes them per merchant, X3). Each
+    * entity is read through [[scoped]]: over a partitioned JDBC source
+    * only the strides the request's window can touch become tasks, and
+    * the merchant set reaches the replica as one pushed `IN` — the
+    * reference's `WHERE merchant_id = :m AND created_at BETWEEN`. */
   def run(spark: SparkSession, dir: String, cfg: Config = Config()): DataFrame =
     cfg.entities.map(entityFeed(spark, dir, _, cfg)).reduce(_ unionAll _)
 
@@ -356,7 +388,7 @@ object Backfill {
     // different stateDirs (a mark advanced by one scope would skip the
     // other scope's older rows).
     val feed = cfg.entities.map { e =>
-      val base = cfg.source(spark, dir, e).filter(predicates(e, cfg))
+      val base = scoped(spark, dir, e, cfg)
       val src = prior.get(e.name)
         .map(h => base.filter(col(e.timeCol).cast("timestamp_ntz") > lit(h)))
         .getOrElse(base)
@@ -368,7 +400,7 @@ object Backfill {
     // (String, LocalDateTime) state encoder AFTER the sink write —
     // wedging the increment permanently (mark never advances)
     val newHwm = cfg.entities.map { e =>
-      val m = cfg.source(spark, dir, e).filter(predicates(e, cfg))
+      val m = scoped(spark, dir, e, cfg)
         .agg(max(col(e.timeCol).cast("timestamp_ntz"))).collect().head
       (e.name, if (m.isNullAt(0)) prior.get(e.name).orNull
                else m.getAs[java.time.LocalDateTime](0))

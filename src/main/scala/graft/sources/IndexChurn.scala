@@ -87,21 +87,17 @@ object IndexChurn {
   /** Column names the churn machinery owns (schema + internals). */
   val ReservedCols: Seq[String] = Seq("op", "seq", "rk", "b")
 
-  /** The table's actual bucket count, from the catalog. Maintenance
-    * entry points resolve the count through this (a `buckets` argument
-    * of -1) rather than trusting a caller-supplied constant: after a
-    * [[rebucket]] the count CHANGES, and a stale constant would make
-    * [[compact]] map rows to the wrong bucket ids — missing dirty
-    * buckets while rewriting clean ones (still serve-consistent, but
-    * debt never clears). Self-describing beats remembering; [[append]]
-    * reads the whole spec the same way. */
+  /** The table's actual bucket count, from the catalog. The
+    * maintenance entry points take the count only from here, never
+    * from a caller: after a [[rebucket]] the count CHANGES, and a stale
+    * constant would make [[compact]] map rows to the wrong bucket ids —
+    * missing dirty buckets while rewriting clean ones (still
+    * serve-consistent, but debt never clears) and writing winners into
+    * files named for the wrong bucket. Self-describing beats
+    * remembering; [[append]] reads the whole spec the same way. */
   def bucketCountOf(spark: SparkSession, table: String): Int =
     Shim.catalogTable(spark, table).bucketSpec
       .getOrElse(sys.error(s"$table is not bucketed")).numBuckets
-
-  private def resolveBuckets(spark: SparkSession, table: String,
-      buckets: Int): Int =
-    if (buckets > 0) buckets else bucketCountOf(spark, table)
 
   /** Append one batch of payload rows (op='U') or tombstones (op='D')
     * into a churnable index table — a bucket-preserving append: the new
@@ -182,10 +178,9 @@ object IndexChurn {
     * rewrite itself collapses ALL debt in a chosen bucket either
     * way. */
   def compact(spark: SparkSession, table: String, keyCols: Seq[String],
-      bucketCols: Seq[String], buckets: Int = -1,
-      tombstonesOnly: Boolean = false): Unit = {
+      bucketCols: Seq[String], tombstonesOnly: Boolean = false): Unit = {
     spark.sql(s"REFRESH TABLE $table") // see debtFraction: cross-session writes
-    val b = resolveBuckets(spark, table, buckets)
+    val b = bucketCountOf(spark, table)
     val t = spark.table(table)
     val affected = (
       if (tombstonesOnly)
@@ -258,7 +253,11 @@ object IndexChurn {
     * the bucket rewrites amortize over many delete batches, which is
     * what makes churn cheaper than rebuilding (NOTES: at 100× one
     * compaction pass approaches a rebuild for doc-granular deletes;
-    * its win IS this amortization). Returns true iff it compacted. */
+    * its win IS this amortization). Returns true iff it compacted.
+    *
+    * `buckets` is not read: [[compact]] takes the table's bucket count
+    * from the catalog ([[bucketCountOf]]). The parameter stays so
+    * existing callers keep compiling. */
   def compactIfNeeded(spark: SparkSession, table: String,
       keyCols: Seq[String], bucketCols: Seq[String], buckets: Int = -1,
       threshold: Double = 0.05): Boolean = {
@@ -268,8 +267,7 @@ object IndexChurn {
     // documented self-healing must not depend on reaching rebucket()
     recoverRebucket(spark, table)
     val run = debtFraction(spark, table) >= threshold
-    if (run) compact(spark, table, keyCols, bucketCols, buckets,
-      tombstonesOnly = true)
+    if (run) compact(spark, table, keyCols, bucketCols, tombstonesOnly = true)
     run
   }
 
@@ -331,12 +329,12 @@ object IndexChurn {
     * so bucket pruning keeps meaning something and a single bucket
     * never becomes the scan. The check is one file listing; the
     * rebuild only runs when growth actually crossed the bound.
-    * Returns the new bucket count (== `buckets` when nothing ran). */
+    * Returns the new bucket count (the catalog's, unchanged, when
+    * nothing ran). */
   def rebucketIfNeeded(spark: SparkSession, table: String,
-      keyCols: Seq[String], bucketCols: Seq[String], buckets: Int = -1,
-      maxBytes: Long): Int = {
+      keyCols: Seq[String], bucketCols: Seq[String], maxBytes: Long): Int = {
     recoverRebucket(spark, table) // see compactIfNeeded: heal BEFORE touching
-    val b = resolveBuckets(spark, table, buckets)
+    val b = bucketCountOf(spark, table)
     if (maxBucketBytes(spark, table) > maxBytes) {
       rebucket(spark, table, keyCols, bucketCols, b * 2)
       b * 2

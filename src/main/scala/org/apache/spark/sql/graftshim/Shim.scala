@@ -79,6 +79,86 @@ object Shim {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The partitioning of a bare partitioned JDBC relation, as its
+    * reader options state it: the partition column, the bound strings
+    * and the partition count. `boundValue` reads a bound string the
+    * way `JDBCRelation.columnPartition` reads these (integral value,
+    * epoch day, or epoch micros in the session time zone), so a window
+    * can be measured against the span; it is None for a string the
+    * column's type cannot hold. */
+  final case class JdbcStrides(column: String, lower: String,
+      upper: String, numPartitions: Int, boundValue: String => Option[Long])
+
+  /** `df`'s JDBC relation when `df` is exactly one partitioned JDBC
+    * read (no projection, filter or other operator on top). */
+  private def jdbcRelation(df: org.apache.spark.sql.DataFrame): Option[(
+      org.apache.spark.sql.execution.datasources.LogicalRelation,
+      org.apache.spark.sql.execution.datasources.jdbc.JDBCRelation)] =
+    analyzed(df) match {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation match {
+          case r: org.apache.spark.sql.execution.datasources.jdbc.JDBCRelation
+              if r.jdbcOptions.partitionColumn.isDefined => Some((lr, r))
+          case _ => None
+        }
+      case _ => None
+    }
+
+  private def sessionConf(
+      r: org.apache.spark.sql.execution.datasources.jdbc.JDBCRelation) =
+    r.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+
+  /** [[JdbcStrides]] of a bare partitioned JDBC read; None for any
+    * other frame. Reads the relation's resolved schema only: no
+    * connection. */
+  def jdbcStrides(df: org.apache.spark.sql.DataFrame): Option[JdbcStrides] =
+    jdbcRelation(df).flatMap { case (_, r) =>
+      import org.apache.spark.sql.catalyst.util.DateTimeUtils
+      import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
+      import org.apache.spark.unsafe.types.UTF8String
+      val o = r.jdbcOptions
+      val zone = DateTimeUtils.getZoneId(
+        sessionConf(r).sessionLocalTimeZone)
+      for {
+        c <- o.partitionColumn
+        lo <- o.lowerBound
+        hi <- o.upperBound
+        n <- o.numPartitions
+        f <- r.schema.find(_.name.equalsIgnoreCase(c))
+        read <- (f.dataType match {
+          case _: NumericType => Some((v: String) => v.toLongOption)
+          case DateType => Some((v: String) =>
+            DateTimeUtils.stringToDate(UTF8String.fromString(v)).map(_.toLong))
+          case TimestampType => Some((v: String) =>
+            DateTimeUtils.stringToTimestamp(UTF8String.fromString(v), zone))
+          case _ => None
+        }): Option[String => Option[Long]]
+      } yield JdbcStrides(c, lo, hi, n, read)
+    }
+
+  /** `df`, a bare partitioned JDBC read, split into `numPartitions`
+    * strides over [`lower`, `upper`] by Spark's own
+    * `JDBCRelation.columnPartition`, over the relation's resolved schema
+    * and its other options unchanged: no second connection and no
+    * second schema probe. The output attributes are kept. */
+  def restrideJdbc(df: org.apache.spark.sql.DataFrame, lower: String,
+      upper: String, numPartitions: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JDBCRelation}
+    val (lr, r) = jdbcRelation(df).getOrElse(throw new IllegalArgumentException(
+      "restrideJdbc needs a bare partitioned JDBC read"))
+    val opts = new JDBCOptions(Seq(
+        JDBCOptions.JDBC_LOWER_BOUND -> lower,
+        JDBCOptions.JDBC_UPPER_BOUND -> upper,
+        JDBCOptions.JDBC_NUM_PARTITIONS -> numPartitions.toString)
+      .foldLeft(r.jdbcOptions.parameters) { case (m, (k, v)) => m.updated(k, v) })
+    val conf = sessionConf(r)
+    val parts = JDBCRelation.columnPartition(r.schema, conf.resolver,
+      conf.sessionLocalTimeZone, opts)
+    ofRows(r.sparkSession, lr.copy(
+      relation = r.copy(parts = parts, jdbcOptions = opts)(r.sparkSession)))
+  }
+
   /** A table's catalog metadata — its properties, `bucketSpec`,
     * location and schema (`getTableMetadata` is behind the private[sql]
     * session state). `table` may be database-qualified. */

@@ -301,11 +301,11 @@ class ChurnSpec extends AnyFunSuite {
       assert(big > 0L)
       // bound above current max: policy must not touch the table
       assert(IndexChurn.rebucketIfNeeded(spark, table,
-        Seq("token", "doc_id"), Seq("token"), 8, big + 1) === 8)
+        Seq("token", "doc_id"), Seq("token"), big + 1) === 8)
       assert(files(table) === before, "no-op policy rewrote files")
       // bound below: evolve to 16 and the new count serves + prunes
       assert(IndexChurn.rebucketIfNeeded(spark, table,
-        Seq("token", "doc_id"), Seq("token"), 8, big - 1) === 16)
+        Seq("token", "doc_id"), Seq("token"), big - 1) === 16)
       assert(IndexChurn.maxBucketBytes(spark, table) < big)
       assert(IndexChurn.served(spark, table, Seq("token", "doc_id"))
         .count() === 200)
@@ -316,6 +316,42 @@ class ChurnSpec extends AnyFunSuite {
         .findFirstMatchIn(plan)
       assert(sel.isDefined && sel.get.group(2).toInt === 16,
         s"evolved table lost pruning:\n$plan")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"DROP TABLE IF EXISTS ${table}__rebucket")
+      spark.sql(s"DROP TABLE IF EXISTS ${table}__retired")
+    }
+  }
+
+  test("compactIfNeeded after a rebucket ignores a stale caller bucket count") {
+    import spark.implicits._
+    val table = "churn_stale_count_t"
+    def servedSet() = IndexChurn.served(spark, table, Seq("token", "doc_id"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    try {
+      seed(table)
+      IndexChurn.rebucket(spark, table, Seq("token", "doc_id"),
+        Seq("token"), newBuckets = 16)
+      // one tombstone per token, so buckets on both sides of 8 are dirty
+      IndexChurn.append(spark, table,
+        (1L to 20L).map(i => (s"tok${i % 20}", i, 0L))
+          .toDF("token", "doc_id", "tf"),
+        "D", 1L)
+      val pre = servedSet()
+      // the caller still holds the pre-rebucket count
+      assert(IndexChurn.compactIfNeeded(spark, table, Seq("token", "doc_id"),
+        Seq("token"), buckets = 8, threshold = 0.0))
+      assert(spark.table(table).filter(col("op") === "D").count() === 0)
+      val rows = spark.read.parquet(location(table))
+        .select(element_at(split(input_file_name(), "/"), -1).as("fname"),
+          IndexChurn.bucketIdExpr(Seq(col("token")), 16).as("bb"))
+        .collect()
+      assert(rows.length === 180)
+      rows.foreach { r =>
+        assert(IndexChurn.bucketOfFile(r.getString(0)) === Some(r.getInt(1)),
+          s"${r.getString(0)} holds a row of bucket ${r.getInt(1)} of 16")
+      }
+      assert(servedSet() === pre, "compaction changed the serve view")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}__rebucket")

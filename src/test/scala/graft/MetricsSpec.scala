@@ -62,6 +62,27 @@ class MetricsSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("windowed two-entity Derby backfill write runs one task per entity") {
+    // two entities over one Derby table, each partitioned 2 ways over
+    // 2024: a one-week window touches one stride of each, so the write
+    // is 2 tasks, not 2 strides x 2 entities
+    val e = PipelineSpec.windowEntity
+    val cfg = Backfill.Config(start = Some("2024-03-01"),
+      end = Some("2024-03-07"), entities = Seq(e, e.copy(name = "win2")),
+      source = (_, _, _) => PipelineSpec.window(parts = 2))
+    val out = java.nio.file.Files.createTempDirectory("windowsink").toString
+    try {
+      val (_, m) = RunMetrics.instrument(spark) {
+        graft.sinks.EventSink.write(Backfill.run(spark, sf, cfg),
+          graft.sinks.EventSink.Parquet(out))
+      }
+      assert(m.jobs == 1 && m.failedJobs == 0, m.render)
+      assert(m.tasks == 2, m.render)
+      assert(spark.read.parquet(out).count() == 12)
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(out))
+  }
+
   test("listener is removed after the run (no counters tick afterwards)") {
     import org.apache.spark.sql.graftshim.Shim
     val l = new RunMetrics

@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, get_json_object}
+import graft.pipeline.Backfill
 import graft.sources.Jdbc
 import graft.operators.Multimodal
 
@@ -423,6 +426,91 @@ class PipelineSpec extends AnyFunSuite {
     } finally conn.close()
   }
 
+  import PipelineSpec.{window, windowEntity}
+
+  private def sorted(feed: DataFrame): Seq[String] =
+    feed.collect().map(_.toString).toSeq.sorted
+
+  private def windowed(start: String, end: String,
+      src: => DataFrame): Backfill.Config =
+    Backfill.Config(start = Some(start), end = Some(end),
+      entities = Seq(windowEntity), source = (_, _, _) => src)
+
+  test("jdbc backfill reads only the strides its window touches, same rows") {
+    // 8 strides of 45.75 days over 2024; the first boundary is
+    // 2024-02-15 18:00, which the second window straddles
+    val cases = Seq(
+      ("2024-03-01", "2024-03-07", 1),
+      ("2024-02-01", "2024-03-20", 2),
+      ("2023-06-01", "2025-06-01", 8),
+      ("2026-01-01", "2026-02-01", 1))
+    cases.foreach { case (start, end, parts) =>
+      val feed = Backfill.run(spark, sf, windowed(start, end, window()))
+      // a transformed source is never restricted: the full 8-stride read
+      val full = Backfill.run(spark, sf,
+        windowed(start, end, window().select("*")))
+      assert(full.rdd.getNumPartitions == 8)
+      assert(feed.rdd.getNumPartitions == parts, s"$start..$end")
+      val rows = sorted(feed)
+      assert(rows == sorted(full), s"$start..$end")
+      assert(rows.isEmpty == start.startsWith("2026"), s"$start..$end")
+      assert(Backfill.feedChecksum(feed).collect().toSeq ==
+        Backfill.feedChecksum(full).collect().toSeq, s"$start..$end")
+    }
+  }
+
+  test("jdbc backfill without a window keeps every stride and NULL-time rows") {
+    val feed = Backfill.run(spark, sf, Backfill.Config(
+      entities = Seq(windowEntity), source = (_, _, _) => window()))
+    assert(feed.rdd.getNumPartitions == 8)
+    assert(feed.count() == PipelineSpec.WindowRows)
+    assert(feed.filter(get_json_object(col("value"), "$.TS").isNull).count() ==
+      PipelineSpec.NullTimeRows)
+  }
+
+  test("Jdbc.within leaves other sources' partitioning unchanged") {
+    val noColumn = Jdbc.load(spark, Jdbc.JdbcConfig(url = PipelineSpec.windowUrl,
+      table = "t_win", partitionColumn = None))
+    val otherColumn = Jdbc.load(spark, Jdbc.JdbcConfig(
+      url = PipelineSpec.windowUrl, table = "t_win", partitionColumn = Some("ID"),
+      lowerBound = Some("0"), upperBound = Some("400"), numPartitions = 8))
+    val transformed = window().filter(col("V").isNotNull)
+    Seq(noColumn -> 1, otherColumn -> 8, transformed -> 8).foreach {
+      case (src, parts) =>
+        assert(Jdbc.within(src, "ts", Some("2024-03-01"), Some("2024-03-07")) eq src)
+        val feed = Backfill.run(spark, sf, windowed("2024-03-01", "2024-03-07", src))
+        assert(feed.rdd.getNumPartitions == parts)
+        assert(feed.count() == 6)
+    }
+  }
+
+  test("merchant set as one InSet returns isin's rows: BIGINT, INTEGER, " +
+      "empty and 5,000 ids") {
+    // ids past INT range must match nothing on the INTEGER column (a
+    // narrowing cast would turn 2^32 + 3 into 3)
+    val big = (0L until 4998L).map(_ * 7) ++ Seq((1L << 32) + 3, -1L)
+    def feed(merchantCol: String, ids: Seq[Long], inSet: Boolean) = {
+      val e = windowEntity.copy(merchantCol = merchantCol)
+      Backfill.run(spark, sf, Backfill.Config(
+        merchantIds = if (inSet) Some(ids) else None, entities = Seq(e),
+        source = (_, _, _) =>
+          if (inSet) window() else window().filter(col(merchantCol).isin(ids: _*))))
+    }
+    for (c <- Seq("m_id", "m_int"); ids <- Seq(Seq(3L, 5L, (1L << 32) + 3),
+        Seq.empty[Long], big)) {
+      val got = sorted(feed(c, ids, inSet = true))
+      assert(got == sorted(feed(c, ids, inSet = false)), s"$c, ${ids.size} ids")
+      assert(got.nonEmpty == ids.nonEmpty)
+    }
+    // the 5,000-id set pushes down as the same In(...) as isin's (the
+    // scan renders the values sorted, so set order cannot differ)
+    def pushed(df: DataFrame) = "PushedFilters: .*, ReadSchema".r
+      .findFirstIn(df.queryExecution.executedPlan.toString)
+    val set = pushed(feed("m_id", big, inSet = true))
+    assert(set.exists(_.contains("In(M_ID")), set)
+    assert(set == pushed(feed("m_id", big, inSet = false)))
+  }
+
   test("compactRun ≡ compactFeed(run): per-entity restructure is row-identical") {
     // r17 optimization pin: compactRun splits the aggregation per entity
     // and pre-spreads small scans by the key string; the rows (and the
@@ -442,4 +530,46 @@ class PipelineSpec extends AnyFunSuite {
     assert(exchangesWithValue.isEmpty,
       s"envelope JSON must not be shuffled: $exchangesWithValue")
   }
+}
+
+object PipelineSpec {
+  val NullTimeRows = 5L
+  val WindowRows: Long = 400L + NullTimeRows
+
+  /** An in-memory Derby table of one row a day from 2023-12-20 to
+    * 2025-01-22 (so some rows lie outside the 2024 partition span) at a
+    * day-varying hour, plus NULL-time rows; merchants `i % 37` as
+    * BIGINT and INTEGER. */
+  lazy val windowUrl: String = {
+    val url = "jdbc:derby:memory:graftjdbcwin;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      conn.createStatement().executeUpdate("""CREATE TABLE t_win (ID BIGINT,
+        M_ID BIGINT, M_INT INT, TS TIMESTAMP, V VARCHAR(16))""")
+      val ps = conn.prepareStatement("INSERT INTO t_win VALUES (?,?,?,?,?)")
+      val first = java.time.LocalDateTime.of(2023, 12, 20, 0, 0)
+      (0L until WindowRows).foreach { i =>
+        ps.setLong(1, i); ps.setLong(2, i % 37); ps.setInt(3, (i % 37).toInt)
+        if (i < 400) ps.setTimestamp(4,
+          java.sql.Timestamp.valueOf(first.plusDays(i).plusHours(i % 24)))
+        else ps.setNull(4, java.sql.Types.TIMESTAMP)
+        ps.setString(5, s"v$i")
+        ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally conn.close()
+    url
+  }
+
+  /** `t_win` partitioned `parts` ways on TS over 2024. */
+  def window(parts: Int = 8): DataFrame =
+    Jdbc.load(TestSpark.spark, Jdbc.JdbcConfig(url = windowUrl, table = "t_win",
+      partitionColumn = Some("TS"), lowerBound = Some("2024-01-01 00:00:00"),
+      upperBound = Some("2025-01-01 00:00:00"), numPartitions = parts))
+
+  /** A backfill entity over `t_win`. It names its columns in lower case
+    * while Derby's catalog holds them in upper case, so every lookup
+    * must be case-insensitive. */
+  val windowEntity: Backfill.Entity = Backfill.Entity("win", "t_win", "id",
+    "m_id", "ts", Seq("ID", "M_ID", "TS", "V"))
 }

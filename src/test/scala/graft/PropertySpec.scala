@@ -497,8 +497,7 @@ class PropertySpec extends AnyFunSuite {
                 else ref ++ keys.map { case (t, d) => (t, d) -> tfv }
           if (doCompact)
             IndexChurn.compact(spark, table, Seq("token", "doc_id"),
-              Seq("token"), 4,
-              tombstonesOnly = scala.util.Random.nextBoolean())
+              Seq("token"), tombstonesOnly = scala.util.Random.nextBoolean())
           val got = IndexChurn.served(spark, table, Seq("token", "doc_id"))
             .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
             .toMap

@@ -133,6 +133,7 @@ def main():
     CAP = max(300.0, 6 * window)
     print(f"calibration [{FAMILY}]: clean ingest+check OK, "
           f"ingest window ~{window:.1f}s, cap {CAP:.0f}s")
+    shutil.rmtree(work, ignore_errors=True)
 
     # each ITERS slot must land a REAL kill: a run that beats the timer
     # still gets its restart+check (a replay-noop is free coverage, and
@@ -163,11 +164,12 @@ def main():
         # a run that beat the timer must have exited clean; a hang is a
         # failure of THIS phase, not something to blur into the restart
         if st == "done" and t != 0:
-            print(f"{tag}; PRE-KILL RUN FAILED rc={t}, see {log}")
+            print(f"{tag}; PRE-KILL RUN FAILED rc={t}, see {log}; kept {work}")
             fails += 1
             continue
         if st == "hung":
-            print(f"{tag}; INGEST HUNG past {CAP:.0f}s cap, see {log}")
+            print(f"{tag}; INGEST HUNG past {CAP:.0f}s cap, see {log}; "
+                  f"kept {work}")
             fails += 1
             continue
         if st == "done":
@@ -176,17 +178,22 @@ def main():
         # resume (or, if the run beat the timer, replay-noop)
         st2, rc2 = run_phase(f"{PREFIX}ingest", work, log)
         if st2 != "done" or rc2 != 0:
-            print(f"{tag}; RESTART FAILED ({st2}) rc={rc2}, see {log}")
+            print(f"{tag}; RESTART FAILED ({st2}) rc={rc2}, see {log}; "
+                  f"kept {work}")
             fails += 1
             continue
         st3, rc3 = run_phase(f"{PREFIX}check", work, log)
         with open(log, "rb") as f:
-            ok = b"KILLPROBE_OK" in f.read()
+            ok = b"KILLPROBE_OK" in f.read() and st3 == "done" and rc3 == 0
         print(f"{tag}; restart done; check "
-              f"{'OK' if ok and st3 == 'done' and rc3 == 0 else 'FAIL'}")
-        if not ok or st3 != "done" or rc3 != 0:
+              f"{'OK' if ok else f'FAIL, see {log}; kept {work}'}")
+        if not ok:
             fails += 1
-        elif st == "killed":
+            continue
+        # a passing iteration's tables, checkpoints and logs are hundreds
+        # of MB; only a failing one is kept for inspection
+        shutil.rmtree(work, ignore_errors=True)
+        if st == "killed":
             kills += 1
     short = ITERS - kills
     print(f"== killmid[{FAMILY}]: {kills} kills ok, {noops} replay-noops, "
