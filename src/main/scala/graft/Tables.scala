@@ -123,28 +123,12 @@ object Tables {
     "event_id" -> LongType, "ts" -> TimestampType, "user_id" -> LongType,
     "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType)
 
-  /** events schema for the TIMESTAMP(NANOS) storage era (`ts` read as
-    * long via nanosAsLong) — shared by the batch loader and the
-    * streaming reader so the two paths can't diverge. */
-  val eventsRawSchema: StructType = st(
-    "event_id" -> LongType, "ts" -> LongType, "user_id" -> LongType,
-    "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType)
-
   /** ns→µs conversion for the stored `ts` long. Integer `div`, not `/`:
     * long/long promotes to double, which loses precision above 2^53
     * (epoch-nanos ≈ 1.7e18) → off-by-1-µs errors. Matches DuckDB's
     * µs-native truncation, so oracle results agree. */
-  def eventsNanosToTs(df: DataFrame): DataFrame =
+  private def eventsNanosToTs(df: DataFrame): DataFrame =
     df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
-  /** True when the stored events.ts is the TIMESTAMP(NANOS) era (reads
-    * as long under nanosAsLong). One footer-schema read; used by the
-    * streaming source, which must pick its explicit schema up front. */
-  private[graft] def eventsStoredAsLongNanos(
-      spark: SparkSession, dir: String): Boolean = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType == LongType
-  }
 
   /** The harness regenerates testdata between rounds and has already
     * changed the physical `ts` type once (TIMESTAMP(NANOS) →

@@ -31,17 +31,14 @@ object SemiStructured {
     * field, which is both the routing signal and the dead letter. The
     * harness corrupts a deterministic subset in-plan so both paths are
     * observable and oracle-checked. */
-  /** The routing projection itself — a stateless narrow map, so the
-    * identical code serves batch and stream
-    * ([[graft.streaming.StreamingBackfill.quarantineStream]]). */
-  def quarantineProjection(events: DataFrame): DataFrame = {
+  def quarantineSplit(spark: SparkSession, dir: String): DataFrame = {
     val payload = when(col("event_id") % 37 === 0,
       concat(lit("x"), col("props"))).otherwise(col("props"))
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("_corrupt", StringType)))
     val opts = new java.util.HashMap[String, String]()
     opts.put("columnNameOfCorruptRecord", "_corrupt")
-    events
+    Tables.load(spark, dir, "events")
       .select(col("event_id"), payload.as("payload"))
       .withColumn("parsed", from_json(col("payload"), schema, opts))
       .select(col("event_id"),
@@ -49,11 +46,8 @@ object SemiStructured {
           .otherwise(lit("ok")).as("status"),
         col("parsed.k").as("k_value"),
         col("parsed._corrupt").as("dead_letter"))
-  }
-
-  def quarantineSplit(spark: SparkSession, dir: String): DataFrame =
-    quarantineProjection(Tables.load(spark, dir, "events"))
       .orderBy("event_id")
+  }
 
   /** Pivot: docs count per lang × source — groupBy+pivot compiles to
     * one hash aggregate with conditional counts (values enumerated, so

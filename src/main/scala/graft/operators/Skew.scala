@@ -4,49 +4,24 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew handling for large⋈large joins on hot keys (the 100 TB
-  * discipline item AQE's skew-join covers only for sort-merge sides it
-  * can split): explicit key salting.
-  *
-  * The skewed (big) side gets a deterministic salt in [0, factor) from
-  * a hash of the whole row — hot keys spread across `factor` shuffle
-  * partitions. The other side is replicated `factor`× (explode of a
-  * literal range — cost factor·|right|, chosen only when |right| is
-  * modest but too big to broadcast). Join key becomes (key, salt).
-  * Deterministic: no rand(), so retried tasks produce identical salts.
+  * discipline item): the harness query `skew_salted_join` joins a
+  * naturally skewed key and lets AQE's sort-merge skew split spread the
+  * hot partitions.
   */
 object Skew {
 
-  def saltBig(df: DataFrame, factor: Int): DataFrame =
-    df.withColumn("_salt_b",
-      pmod(xxhash64(struct(df.columns.map(col): _*)), lit(factor.toLong)))
-
-  def replicateSmall(df: DataFrame, factor: Int): DataFrame =
-    df.withColumn("_salt_s",
-      explode(sequence(lit(0L), lit(factor.toLong - 1))))
-
-  /** Inner equi-join with the hot-key spread: result ≡ plain join
-    * (SkewSpec asserts equivalence). */
-  def saltedJoin(big: DataFrame, small: DataFrame, bigKey: String,
-      smallKey: String, factor: Int = 8): DataFrame =
-    saltBig(big, factor).join(replicateSmall(small, factor),
-        col(bigKey) === col(smallKey) && col("_salt_b") === col("_salt_s"))
-      .drop("_salt_b", "_salt_s")
-
   /** Harness face of the skewed join: lineitem (hot keys: one order =
     * up to 7 lines, and the join key has TPC-H's natural skew) ⋈ orders
-    * subset. The output is the plain join either way (the salt never
-    * reaches it), so the oracle is unchanged.
+    * subset.
     *
-    * r18 A/B (guide §2.2, VERDICT item 7): the manual [[saltedJoin]]
-    * moves `factor`× the orders side through the shuffle (the explode
-    * replication) and salts the big side's keys; AQE's sort-merge skew
-    * split handles this fixture's skew with NO replication — measured
-    * 0.57 s (salted) vs 0.19 s (plain) warm-min at sf0.1, and at scale
-    * the plain form shuffles |orders| instead of 8·|orders|. The query
-    * therefore serves the plain join and lets AQE split hot partitions;
-    * [[saltedJoin]] stays as the discipline for the shapes AQE cannot
-    * split (shuffled-hash sides, aggregate-input skew, colocated
-    * bucket joins) and SkewSpec still pins its equivalence. */
+    * r18 A/B (guide §2.2, VERDICT item 7): a manual key-salted join
+    * (big side salted by a row hash, small side replicated `factor`×)
+    * moves `factor`× the orders side through the shuffle; AQE's
+    * sort-merge skew split handles this fixture's skew with NO
+    * replication — measured 0.57 s (salted) vs 0.19 s (plain) warm-min
+    * at sf0.1, and at scale the plain form shuffles |orders| instead of
+    * 8·|orders|. The query therefore serves the plain join and lets AQE
+    * split hot partitions. */
   def saltedJoinQuery(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val li = graft.Tables.load(spark, dir, "lineitem")

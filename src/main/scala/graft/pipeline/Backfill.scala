@@ -499,13 +499,4 @@ object Backfill {
         .agg(count(lit(1)).as("n_deliveries"))
     }.reduce(_ unionAll _)
   }
-
-  /** Batch Kafka sink for the feed (production path; offline harness
-    * writes parquet instead — zero egress). */
-  def writeKafka(feed: DataFrame, brokers: String, topic: String): Unit =
-    feed.selectExpr("key", "value")
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .save()
 }

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.graftshim.Shim
 import graft.Tables
 
-/** Bucketed (pre-partitioned) catalog tables: the co-located join
-  * tables and every index family graft serves from the catalog — E16
-  * postings and positional indexes, E2a band indexes, E3 assignment and
+/** Bucketed (pre-partitioned) catalog tables: every index family graft
+  * serves from the catalog — E16 postings and positional indexes, E2a band indexes, E3 assignment and
   * IVF-PQ/SQ8 lists. Bucketing pays the clustering once at write time;
   * a join or `IN` filter on the bucket key then needs no exchange on
   * the index side and opens only the matching buckets' files.
@@ -67,24 +66,6 @@ object Bucketing {
     val cols = meta.schema.fieldNames.toSeq
     write(rows.select(cols.map(col): _*), table, "append",
       meta.bucketSpec.getOrElse(sys.error(s"$table is not bucketed")))
-  }
-
-  /** Write both sides bucketed+sorted on the join key into the session
-    * catalog (native data-source tables — no Hive needed). */
-  def writeBucketed(spark: SparkSession, dir: String): Unit = {
-    write(Tables.load(spark, dir, "orders"), "orders_bkt", "overwrite",
-      specOf(Seq("o_custkey")))
-    write(Tables.load(spark, dir, "customer"), "customer_bkt", "overwrite",
-      specOf(Seq("c_custkey")))
-  }
-
-  /** Join the bucketed tables: sort-merge (hinted past the broadcast
-    * chooser to show the bucketing effect) with zero exchanges. */
-  def colocatedJoin(spark: SparkSession): DataFrame = {
-    val o = spark.table("orders_bkt")
-    val c = spark.table("customer_bkt")
-    o.hint("merge").join(c, o("o_custkey") === c("c_custkey"))
-      .select(o("o_orderkey"), o("o_custkey"), c("c_name"), o("o_totalprice"))
   }
 
   /** The band index's bucket columns. Bucketed on BOTH join keys — a

@@ -18,20 +18,8 @@ import graft.Tables
   *     layout trick behind Delta/Iceberg `OPTIMIZE ZORDER BY`,
   *     re-expressed as a plain deterministic Catalyst expression (bit
   *     shifts + masks, codegen'd, oracle-checkable).
-  *   - [[writeClustered]]: range-repartition by a cluster key and sort
-  *     within partitions — the generic "compact + cluster" writer that
-  *     also solves the small-files problem (N output files of similar
-  *     size, each covering a contiguous key range).
-  *   - [[fileExtents]]: the audit — per-file min/max of the query
-  *     columns, i.e. exactly the stats a reader's pruning sees. The
-  *     LayoutSpec uses it to PROVE the z-order claim: a box predicate
-  *     overlaps few z-clustered files, while a linear layout serves
-  *     only its own dimension.
-  *
-  * Scale note: `repartitionByRange` samples the key once (one pass) and
-  * every downstream stage is a narrow write — layout cost is one
-  * shuffle of the data being laid out, amortized over every query that
-  * reads it after.
+  *   - [[zorderKey]]: the harness query that computes it over the
+  *     events table's (entity, time) dimensions.
   */
 object Layout {
 
@@ -53,38 +41,6 @@ object Layout {
       shiftright(x, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)) +
         shiftright(y, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i))
     }.reduce(_ + _)
-
-  /** Cluster + compact writer: range-repartition into `files` output
-    * files by `key` (each file a contiguous, similarly-sized key
-    * range — the small-files fix), sorted within each file so
-    * row-group min-max stats are tight. */
-  def writeClustered(df: DataFrame, dir: String, key: Column,
-      files: Int): Unit =
-    df.withColumn("_ck", key)
-      .repartitionByRange(files, col("_ck"))
-      .sortWithinPartitions("_ck")
-      .drop("_ck")
-      .write.mode("overwrite").parquet(dir)
-
-  /** Per-file [min, max] extents of two columns — what min-max pruning
-    * sees. One scan + one hash aggregate on the file name. */
-  def fileExtents(spark: SparkSession, dir: String,
-      x: String, y: String): DataFrame =
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(x)).as("x_min"), max(col(x)).as("x_max"),
-        min(col(y)).as("y_min"), max(col(y)).as("y_max"))
-
-  /** Fraction of files whose extent overlaps the box — the pruning
-    * proxy: a reader must touch exactly the overlapping files. */
-  def filesTouched(extents: DataFrame, xLo: Long, xHi: Long,
-      yLo: Long, yHi: Long): (Long, Long) = {
-    val total = extents.count()
-    val touched = extents.filter(
-      col("x_max") >= xLo && col("x_min") <= xHi &&
-        col("y_max") >= yLo && col("y_min") <= yHi).count()
-    (touched, total)
-  }
 
   /** Harness query `zorder_key`: the z-value over the events table's
     * (user_id, hour-of-stream) — the two dimensions an events reader

@@ -1,208 +1,56 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
 
 /** E7 — incremental/streaming backfill (SURVEY.md §2.9): the Structured
-  * Streaming twin of the batch pipeline, giving the checkpointed
-  * exactly-once story the reference lacks (its X6 fail-fast re-run is
-  * at-least-once with no resume — `src/main.rs:309-312`).
+  * Streaming loops that keep graft's stores and serving indexes current
+  * at ingest latency, with the checkpointed exactly-once story the
+  * reference lacks (its X6 fail-fast re-run is at-least-once with no
+  * resume — `src/main.rs:309-312`).
   *
-  * Shape: `readStream` (file source here; Kafka source in production) →
-  * event-time watermark → tumbling-window aggregation / envelope
-  * transform → `writeStream` with checkpointing. The harness drives it
-  * with the memory sink + `processAllAvailable()` (offline container:
-  * no broker), asserting stream ≡ batch on the same input.
+  * Shape: a `readStream` source (file source here; Kafka in production)
+  * → [[drain]], the one `foreachBatch` harness → a per-microbatch body
+  * that is idempotent under redelivery. The loops grow the corpus store
+  * and band index ([[ingestDedupLoop]]), the BM25 postings index
+  * ([[indexMaintenanceLoop]]), all of those plus curation and the ANN
+  * assignment index ([[fullIngestLoop]]), retract from the indexes
+  * ([[churnIngestLoop]]), upsert a CDC snapshot store
+  * ([[cdcUpsertLoop]]) and maintain the kNN graph ([[graphIngestLoop]],
+  * [[graphChurnLoop]]).
   */
 object StreamingBackfill {
 
-  /** File-source stream over the events table (one file per trigger =
-    * replay). File-source streams require the schema up front, so the
-    * storage era is probed with one batch footer read
-    * ([[graft.Tables.eventsStoredAsLongNanos]]) and the schema +
-    * conversion are the SAME definitions the batch loader uses — the
-    * r7 data drift (ns→µs) proved why: a stream hardcoding the nanos
-    * schema over µs data divides valid micros by 1000 into garbage. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    if (graft.Tables.eventsStoredAsLongNanos(spark, dir)) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      graft.Tables.eventsNanosToTs(
-        spark.readStream
-          .schema(graft.Tables.eventsRawSchema)
-          .option("pathGlobFilter", "events.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(dir))
-    } else {
-      // µs era: explicit LTZ schema = session-tz-independent UTC read
-      spark.readStream
-        .schema(graft.Tables.eventsSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir)
-    }
-
-  /** File-source stream over the documents table — the "new crawl"
-    * ingest stream that [[incrementalDedupStream]] screens. */
-  def documentsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(graft.Tables.documentsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-
-  /** Watermarked tumbling-window counts per event type — the streaming
-    * twin of [[graft.operators.Aggregates.eventsWindowAgg]]. */
-  def windowedCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(col("window.start").as("ws"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  /** Gap-based session windows on the stream (`session_window` — the
-    * built-in dynamic-gap sibling of the batch sessionization in
-    * Aggregates.sessionize): sessions close when the watermark passes
-    * the 30-minute gap. */
-  def sessionWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("session_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("session_value"))
-
-  /** Arbitrary stateful processing (`flatMapGroupsWithState`): per-user
-    * running totals with explicit state — the KeyValueGroupedDataset
-    * path for logic windows can't express. Emits one update per input
-    * row: (user_id, event_id, events_so_far, value_so_far). */
-  def statefulRunningTotals(spark: SparkSession, events: DataFrame)
-      : DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val typed = events.select(col("user_id"), col("event_id"), col("value"))
-      .as[(Long, Long, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double), (Long, Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long, Double)],
-         state: GroupState[(Long, Double)]) =>
-          var (n, tot) = state.getOption.getOrElse((0L, 0.0))
-          val out = rows.toSeq.sortBy(_._2).map { case (_, eid, v) =>
-            n += 1; tot += v
-            (user, eid, n, math.rint(tot * 100) / 100)
-          }
-          state.update((n, tot))
-          out.iterator
+  /** The one streaming harness every loop here runs through: `source`
+    * in append mode with a `ProcessingTime(0)` trigger, `body` called
+    * once per NON-EMPTY microbatch with the batch and its id, and the
+    * stream drained (`processAllAvailable`) and stopped before return.
+    *
+    * A non-empty `checkpointDir` makes the stream RESUMABLE: a killed
+    * process restarts from the last committed offset and REDELIVERS the
+    * in-flight batch (at-least-once) — each loop's per-step idempotence
+    * absorbs exactly that redelivery, and a rerun over a drained
+    * checkpoint processes nothing (CdcSpec pins that). Empty keeps the
+    * run-once behavior: every run starts from offset 0, which the
+    * replay specs use to redeliver a whole stream. Production always
+    * passes one (tools/verify_killmid.py SIGKILLs the loops mid-batch
+    * and holds serve == batch rebuild through it). */
+  private def drain(source: DataFrame, checkpointDir: String)(
+      body: (Dataset[Row], Long) => Unit): Unit = {
+    val w = source.writeStream
+    val q = (if (checkpointDir.nonEmpty)
+        w.option("checkpointLocation", checkpointDir) else w)
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        if (!batch.isEmpty) body(batch, id)
       }
-      .toDF("user_id", "event_id", "events_so_far", "value_so_far")
-  }
-
-  /** Streaming envelope feed (tenant-stamped JSON values keyed by event
-    * identity) — the incremental form of the batch Kafka feed; attach
-    * `.format("kafka").option("topic", …)` in production. */
-  def envelopeStream(events: DataFrame): DataFrame =
-    events.select(
-      lit("events").as("entity"),
-      col("event_id").cast("string").as("key"),
-      lit("public").as("tenant"),
-      to_json(struct(
-        col("event_id"), col("user_id"), col("event_type"),
-        format_string("%.2f", col("value")).as("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts")
-      )).as("value"))
-
-  /** Streaming exact-dedup with watermarked state eviction: duplicates
-    * within the watermark horizon are dropped, state for expired event
-    * times is reclaimed. FIRST-ARRIVAL-wins semantics — the contract
-    * `dropDuplicatesWithinWatermark` offers (a stream cannot wait to
-    * learn a smaller (ts, event_id) may still arrive); the batch
-    * Dedup.exactByKey keeps min-(ts, event_id) instead, so the two
-    * agree only on arrival-ordered input. The spec accordingly pins
-    * the count bound, not row equality. */
-  def dedupStream(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select("user_id", "event_type", "event_id", "ts")
-
-  /** Stream-stream self-join: pair each purchase with the same user's
-    * signup within the preceding 24 h — both sides watermarked, the
-    * range condition bounds the join state. */
-  def purchaseAfterSignup(events: DataFrame): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts")).withWatermark("p_ts", "1 hour")
-    val signups = events.filter(col("event_type") === "signup")
-      .select(col("user_id").as("s_user"), col("event_id").as("signup_id"),
-        col("ts").as("s_ts")).withWatermark("s_ts", "1 hour")
-    purchases.join(signups,
-      col("user_id") === col("s_user") &&
-        col("s_ts") <= col("p_ts") &&
-        col("s_ts") >= col("p_ts") - expr("INTERVAL 24 HOURS"))
-      .select("user_id", "purchase_id", "signup_id", "p_ts", "s_ts")
-  }
-
-  /** Run a streaming DataFrame to completion into an in-memory table;
-    * returns the result. Complete mode for aggregations (watermark
-    * semantics leave windows open in append mode on a finite replay). */
-  def runToMemory(spark: SparkSession, df: DataFrame, name: String,
-      outputMode: String = "complete"): DataFrame = {
-    val q = df.writeStream
-      .format("memory").queryName(name)
-      .outputMode(outputMode)
       .trigger(Trigger.ProcessingTime(0))
       .start()
     q.processAllAvailable()
     q.stop()
-    spark.table(name)
   }
-
-  /** Streaming dead-letter split — the streaming twin of
-    * [[graft.operators.SemiStructured.quarantineSplit]]: the routing is
-    * a stateless narrow map (the shared projection), so it applies to a
-    * stream unchanged; in production the two statuses fan out to the
-    * main topic and a quarantine topic for replay. */
-  def quarantineStream(events: DataFrame): DataFrame =
-    graft.operators.SemiStructured.quarantineProjection(events)
-
-  /** Stream-static enrichment: the event stream broadcast-joins the
-    * static key-store/dimension table — per-microbatch hash join, no
-    * streaming state at all (the streaming twin of the batch J1
-    * key-store join). */
-  def enrichWithDim(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(org.apache.spark.sql.functions.broadcast(dim),
-        events("user_id") === dim("c_custkey"), "left")
-      .select(events("event_id"), events("user_id"), events("event_type"),
-        dim("c_name"), dim("c_mktsegment"))
-
-  /** Ingest-time near-dup screening — the streaming twin of
-    * [[graft.operators.Dedup.incrementalPairs]]: a stream of new
-    * documents is shingled/minhashed/banded IN-STREAM (the per-row
-    * HOF-min form, [[graft.operators.Dedup.minhashBandsPerRow]] — a
-    * pure narrow map, no streaming state) and stream-static joined
-    * against the materialized corpus band table; any bucket collision
-    * emits a (doc_id, corpus_id) duplicate candidate BEFORE the doc
-    * lands in the corpus. The static side re-resolves per microbatch,
-    * so a nightly corpus-index refresh is picked up without a stream
-    * restart. Candidates are not distinct-ed here (that would need
-    * state); the downstream exact-Jaccard verify dedupes — same
-    * contract as the batch path's candidate stage. Pass a skew-capped
-    * band table (the batch cap's broadcast anti-join applies to the
-    * static side unchanged) to bound any boilerplate bucket. */
-  def incrementalDedupStream(newDocs: DataFrame, corpusBands: DataFrame): DataFrame =
-    graft.operators.Dedup.minhashBandsPerRow(newDocs)
-      .join(corpusBands
-          .withColumnRenamed("doc_id", "corpus_id"),
-        Seq("band_id", "band_key"))
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("corpus_id"))
 
   /** The COMPLETE streaming ingest-dedup loop, per microbatch:
     *
@@ -217,8 +65,8 @@ object StreamingBackfill {
     *     read), only corpus candidates are re-read, from a FRESH scan
     *     of the corpus store (not the memoized [[graft.Tables]] cache,
     *     whose file index would not see prior batches' appends);
-    *  4. verified pairs land in a batch-id-suffixed dir (idempotent
-    *     replay — same pattern as [[runForeachBatchParquet]]);
+    *  4. verified pairs land in a batch-id-suffixed overwrite dir, so
+    *     a replayed batch rewrites its own report;
     *  5. the batch's docs append into the corpus doc store and its
     *     bands into the band index, so the NEXT microbatch screens
     *     against this one (StreamingSpec proves a batch-2 near-dup of a
@@ -231,20 +79,12 @@ object StreamingBackfill {
   def ingestDedupLoop(spark: SparkSession, newDocs: DataFrame,
       corpusDir: String, indexTable: String, outDir: String,
       threshold: Double = 0.5): Unit = {
-    val q = newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          applyDedupScreenBatch(s, batch.toDF(), id, "ingest",
-            corpusDir, indexTable, outDir, threshold)
-          ()
-        }
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(newDocs, "") { (batch, id) =>
+      val s = batch.sparkSession
+      applyDedupScreenBatch(s, batch.toDF(), id, "ingest",
+        corpusDir, indexTable, outDir, threshold)
+      ()
+    }
   }
 
   /** One microbatch's dedup screen + store/index growth — the SHARED
@@ -367,17 +207,10 @@ object StreamingBackfill {
     * dedicated [[churnIngestLoop]] (tombstone batches, `op='D'`). */
   def indexMaintenanceLoop(spark: SparkSession, newDocs: DataFrame,
       indexTable: String): Unit = {
-    val q = newDocs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          appendPostingsBatch(batch.sparkSession, indexTable,
-            batch.toDF(), id)
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(newDocs, "") { (batch, id) =>
+      appendPostingsBatch(batch.sparkSession, indexTable,
+        batch.toDF(), id)
+    }
   }
 
   /** The WHOLE ingest path in one loop — the seam-closer between the
@@ -423,63 +256,47 @@ object StreamingBackfill {
       embedder: DataFrame => DataFrame, outDir: String,
       threshold: Double = 0.5,
       simThreshold: Double = 0.40, checkpointDir: String = ""): Unit = {
-    import graft.operators.{Dedup, Memo, Similarity}
-    import graft.sources.{Bucketing, IndexChurn}
+    import graft.operators.{Memo, Similarity}
+    import graft.sources.IndexChurn
     // the frozen codebook as probe literals, collected once per loop
     val cents = Similarity.centroidArtifact(centroids)
-    // a non-empty checkpointDir makes the stream RESUMABLE: a killed
-    // process restarts from the last committed offset and REDELIVERS
-    // the in-flight batch (at-least-once) — the per-step idempotence
-    // contracts above absorb exactly that redelivery. Empty keeps the
-    // legacy run-once behavior (specs replay by restarting from 0);
-    // production always passes one (tools/verify_killmid.py SIGKILLs
-    // the loop mid-batch and holds serve == batch rebuild through it)
-    val w0 = newDocs.writeStream
-    val w = if (checkpointDir.nonEmpty)
-      w0.option("checkpointLocation", checkpointDir) else w0
-    val q = w
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val docs = batch.toDF()
-          applyDedupScreenBatch(s, docs, id, "full",
-            corpusDir, bandIndexTable, outDir, threshold)
-          // curation columns at ingest latency — batch-keyed overwrite,
-          // so redelivery rewrites rather than doubles
-          growCuration(s, corpusDir, docs, id)
-          appendPostingsBatch(s, postingsIndexTable, docs, id)
-          // the embedder (the embedding model in production) runs ONCE:
-          // uncached, the screen write and the index append would each
-          // re-execute it — the most expensive step of the loop. Scoped
-          // scratch: consumed and deleted within the batch
-          Memo.withScratch(s, s"full_vecs_$id")(embedder(docs)) { vecs =>
-            // REFRESH first: the index pre-dates this stream (another
-            // session built it), and the clone session's relation cache
-            // would otherwise miss its files — see IndexChurn.compact
-            s.sql(s"REFRESH TABLE $assignIndexTable")
-            // screen against the corpus EXCLUDING this batch's own ids:
-            // batch-mode at-ingest semantics (the probe sees the corpus
-            // as of before the batch), and the REPLAY guard — after a
-            // crash between the append and the checkpoint commit, the
-            // serve view already holds the batch, and without the
-            // anti-join two within-batch near-dups would reject each
-            // other on redelivery, flipping their reported verdicts
-            Similarity.semanticScreenFrom(vecs,
-                IndexChurn.served(s, assignIndexTable, Seq("c_id", "vec_id"))
-                  .join(vecs.select("vec_id"), Seq("vec_id"), "left_anti"),
-                cents, simThreshold)
-              .write.mode("overwrite").parquet(s"$outDir/semscreen/batch_id=$id")
-            IndexChurn.append(s, assignIndexTable,
-              Similarity.assignVectors(vecs, centroids),
-              "U", id)
-          }
-        }
+    // resumable through drain's checkpoint: the per-step idempotence
+    // contracts above absorb a redelivered batch
+    drain(newDocs, checkpointDir) { (batch, id) =>
+      val s = batch.sparkSession
+      val docs = batch.toDF()
+      applyDedupScreenBatch(s, docs, id, "full",
+        corpusDir, bandIndexTable, outDir, threshold)
+      // curation columns at ingest latency — batch-keyed overwrite,
+      // so redelivery rewrites rather than doubles
+      growCuration(s, corpusDir, docs, id)
+      appendPostingsBatch(s, postingsIndexTable, docs, id)
+      // the embedder (the embedding model in production) runs ONCE:
+      // uncached, the screen write and the index append would each
+      // re-execute it — the most expensive step of the loop. Scoped
+      // scratch: consumed and deleted within the batch
+      Memo.withScratch(s, s"full_vecs_$id")(embedder(docs)) { vecs =>
+        // REFRESH first: the index pre-dates this stream (another
+        // session built it), and the clone session's relation cache
+        // would otherwise miss its files — see IndexChurn.compact
+        s.sql(s"REFRESH TABLE $assignIndexTable")
+        // screen against the corpus EXCLUDING this batch's own ids:
+        // batch-mode at-ingest semantics (the probe sees the corpus
+        // as of before the batch), and the REPLAY guard — after a
+        // crash between the append and the checkpoint commit, the
+        // serve view already holds the batch, and without the
+        // anti-join two within-batch near-dups would reject each
+        // other on redelivery, flipping their reported verdicts
+        Similarity.semanticScreenFrom(vecs,
+            IndexChurn.served(s, assignIndexTable, Seq("c_id", "vec_id"))
+              .join(vecs.select("vec_id"), Seq("vec_id"), "left_anti"),
+            cents, simThreshold)
+          .write.mode("overwrite").parquet(s"$outDir/semscreen/batch_id=$id")
+        IndexChurn.append(s, assignIndexTable,
+          Similarity.assignVectors(vecs, centroids),
+          "U", id)
       }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
   }
 
   /** The per-batch tokenize shared by the append and churn loops:
@@ -583,45 +400,34 @@ object StreamingBackfill {
     * can never accrete unbounded debt. The tick itself is two
     * column-pruned counts per index; compaction replays fine (winners
     * keep their (op, seq), so the monotonic-seq contract and replay
-    * idempotence survive the rewrite). */
+    * idempotence survive the rewrite). Every append and compaction
+    * takes its table's bucket count from the catalog, so the loop takes
+    * none. */
   def churnIngestLoop(spark: SparkSession, ops: DataFrame,
       postingsTable: String, assignTable: String, centroids: DataFrame,
-      embedder: DataFrame => DataFrame, buckets: Int = -1,
+      embedder: DataFrame => DataFrame,
       doclenTable: Option[String] = None,
       compactThreshold: Double = Double.NaN,
       seqBase: Long = ChurnSeqBase, checkpointDir: String = ""): Unit = {
     import graft.sources.IndexChurn
-    // resumable like fullIngestLoop: a killed process restarts from the
-    // last committed offset and REDELIVERS the in-flight batch — the
-    // per-step idempotence (identical (op, seq) re-appends collapse in
-    // the latest-wins serve) absorbs exactly that redelivery
-    // (tools/verify_killmid.py --phase churn SIGKILLs this loop)
-    val w0 = ops.writeStream
-    val w = if (checkpointDir.nonEmpty)
-      w0.option("checkpointLocation", checkpointDir) else w0
-    val q = w
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          applyChurnBatch(s, postingsTable, assignTable,
-            centroids, embedder, batch.toDF(), id, buckets, doclenTable,
-            seqBase)
-          if (!compactThreshold.isNaN) {
-            IndexChurn.compactIfNeeded(s, postingsTable,
-              Seq("token", "doc_id"), Seq("token"), buckets, compactThreshold)
-            doclenTable.foreach(dt => IndexChurn.compactIfNeeded(s, dt,
-              Seq("doc_id"), Seq("doc_id"), buckets, compactThreshold))
-            IndexChurn.compactIfNeeded(s, assignTable,
-              Seq("c_id", "vec_id"), Seq("c_id"), buckets, compactThreshold)
-            ()
-          }
-        }
+    // resumable: identical (op, seq) re-appends of a redelivered batch
+    // collapse in the latest-wins serve (tools/verify_killmid.py
+    // --phase churn SIGKILLs this loop)
+    drain(ops, checkpointDir) { (batch, id) =>
+      val s = batch.sparkSession
+      applyChurnBatch(s, postingsTable, assignTable,
+        centroids, embedder, batch.toDF(), id, doclenTable = doclenTable,
+        seqBase = seqBase)
+      if (!compactThreshold.isNaN) {
+        IndexChurn.compactIfNeeded(s, postingsTable,
+          Seq("token", "doc_id"), Seq("token"), threshold = compactThreshold)
+        doclenTable.foreach(dt => IndexChurn.compactIfNeeded(s, dt,
+          Seq("doc_id"), Seq("doc_id"), threshold = compactThreshold))
+        IndexChurn.compactIfNeeded(s, assignTable,
+          Seq("c_id", "vec_id"), Seq("c_id"), threshold = compactThreshold)
+        ()
       }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
   }
 
   /** Streaming CDC upsert — the continuous form of the batch
@@ -644,25 +450,11 @@ object StreamingBackfill {
     // what the store already holds, and mergeIntoStore's aside/staging
     // recovery repairs a swap the kill interrupted (killmid --phase
     // cdc SIGKILLs this loop mid-merge)
-    val w0 = changes.writeStream
-    val w = if (checkpointDir.nonEmpty)
-      w0.option("checkpointLocation", checkpointDir) else w0
-    val q = w
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Cdc.mergeIntoStore(batch.toDF(), storeDir, buckets, id)
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(changes, checkpointDir) { (batch, id) =>
+      graft.operators.Cdc.mergeIntoStore(batch.toDF(), storeDir, buckets, id)
+    }
   }
 
-  /** foreachBatch sink with idempotent per-batch output: each microbatch
-    * writes to a batch-id-suffixed directory, so replays after failure
-    * overwrite rather than duplicate — the exactly-once file-sink
-    * pattern (upgrades the reference's at-least-once X6 story). */
   // ---------------------------------------------- kNN-graph maintenance
 
   /** Serve view of the streaming-maintained kNN graph at `graphDir`:
@@ -932,67 +724,56 @@ object StreamingBackfill {
     // marker and their assignment re-appends collapse latest-wins —
     // the same protocol the whole-stream-replay spec pins, here
     // process-kill-proven (tools/verify_killmid.py --phase graph)
-    val w0 = newVecs.writeStream
-    val w = if (checkpointDir.nonEmpty)
-      w0.option("checkpointLocation", checkpointDir) else w0
-    val q = w
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val vecs = Similarity.vectorsOf(batch.toDF())
-          Memo.withScratch(s, s"graph_bidx_$id")(
-              Similarity.assignVectors(vecs, centroids)
-                .select("c_id", "vec_id", "v", "nrm")) { batchIdx =>
-            val (fs, _) = graphFs(s, graphDir)
-            val deltaDir = new org.apache.hadoop.fs.Path(
-              s"$graphDir/batch_id=$id")
-            val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
-            if (!fs.exists(marker)) {
-              if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
-              s.sql(s"REFRESH TABLE $assignIndexTable")
-              val oldIdx = IndexChurn
-                .served(s, assignIndexTable, Seq("c_id", "vec_id"))
-                .select("c_id", "vec_id", "v", "nrm")
-                .join(batchIdx.select("vec_id"), Seq("vec_id"), "left_anti")
-              val oldQ = oldIdx.select(col("vec_id").as("q_id"),
-                col("v").as("q_v"), col("nrm").as("q_nrm"))
-              val newQ = batchIdx.select(col("vec_id").as("q_id"),
-                col("v").as("q_v"), col("nrm").as("q_nrm"))
-              // ONE store listing serves both the fold's base and the next
-              // monotone seq (the seq read is a single-column scan)
-              val dirs = committedDeltas(s, graphDir)
-              val base = servedFromDirs(s, dirs)
-              val (_, remerged) = Similarity.graphReverseMerge(
-                base, batchIdx, oldQ, cents, k, nprobe)
-              val newEdges = Similarity.scoreTopK(
-                oldIdx.unionByName(batchIdx),
-                Similarity.withProbes(newQ, cents, nprobe), k)
-              remerged.unionByName(newEdges)
-                .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
-                .withColumn("wsrc", lit(s"batch_id=$id"))
-                .write.mode("overwrite").parquet(deltaDir.toString)
-              fs.create(marker, true).close()
-              ()
-            }
-            IndexChurn.append(s, assignIndexTable, batchIdx, "U", id)
-          }
-          // debt-gated maintenance tick (the graph twin of
-          // churnIngestLoop's compactIfNeeded): the delta store grows
-          // one directory per microbatch; past the threshold, fold —
-          // serve-consistent at every instant, so it can run inside
-          // the loop at ingest cadence. 0 = off (the replay-no-op spec
-          // relies on markers surviving, which compaction removes —
-          // production runs checkpointed, where ids never restart).
-          if (compactEvery > 0 &&
-            committedDeltas(s, graphDir).length >= compactEvery)
-            compactGraph(s, graphDir)
+    drain(newVecs, checkpointDir) { (batch, id) =>
+      val s = batch.sparkSession
+      val vecs = Similarity.vectorsOf(batch.toDF())
+      Memo.withScratch(s, s"graph_bidx_$id")(
+          Similarity.assignVectors(vecs, centroids)
+            .select("c_id", "vec_id", "v", "nrm")) { batchIdx =>
+        val (fs, _) = graphFs(s, graphDir)
+        val deltaDir = new org.apache.hadoop.fs.Path(
+          s"$graphDir/batch_id=$id")
+        val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
+        if (!fs.exists(marker)) {
+          if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
+          s.sql(s"REFRESH TABLE $assignIndexTable")
+          val oldIdx = IndexChurn
+            .served(s, assignIndexTable, Seq("c_id", "vec_id"))
+            .select("c_id", "vec_id", "v", "nrm")
+            .join(batchIdx.select("vec_id"), Seq("vec_id"), "left_anti")
+          val oldQ = oldIdx.select(col("vec_id").as("q_id"),
+            col("v").as("q_v"), col("nrm").as("q_nrm"))
+          val newQ = batchIdx.select(col("vec_id").as("q_id"),
+            col("v").as("q_v"), col("nrm").as("q_nrm"))
+          // ONE store listing serves both the fold's base and the next
+          // monotone seq (the seq read is a single-column scan)
+          val dirs = committedDeltas(s, graphDir)
+          val base = servedFromDirs(s, dirs)
+          val (_, remerged) = Similarity.graphReverseMerge(
+            base, batchIdx, oldQ, cents, k, nprobe)
+          val newEdges = Similarity.scoreTopK(
+            oldIdx.unionByName(batchIdx),
+            Similarity.withProbes(newQ, cents, nprobe), k)
+          remerged.unionByName(newEdges)
+            .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
+            .withColumn("wsrc", lit(s"batch_id=$id"))
+            .write.mode("overwrite").parquet(deltaDir.toString)
+          fs.create(marker, true).close()
+          ()
         }
+        IndexChurn.append(s, assignIndexTable, batchIdx, "U", id)
       }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      // debt-gated maintenance tick (the graph twin of
+      // churnIngestLoop's compactIfNeeded): the delta store grows
+      // one directory per microbatch; past the threshold, fold —
+      // serve-consistent at every instant, so it can run inside
+      // the loop at ingest cadence. 0 = off (the replay-no-op spec
+      // relies on markers surviving, which compaction removes —
+      // production runs checkpointed, where ids never restart).
+      if (compactEvery > 0 &&
+        committedDeltas(s, graphDir).length >= compactEvery)
+        compactGraph(s, graphDir)
+    }
   }
 
   /** STREAMING kNN-graph CHURN — deletes reaching the graph artifact at
@@ -1041,101 +822,66 @@ object StreamingBackfill {
     // resumable: the delta marker skips a redelivered fold; the
     // assignment tombstone re-append is an identical (op, seq) row
     // that collapses latest-wins (killmid --phase gchurn)
-    val w0 = deletes.writeStream
-    val w = if (checkpointDir.nonEmpty)
-      w0.option("checkpointLocation", checkpointDir) else w0
-    val q = w
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val vecs = Similarity.vectorsOf(batch.toDF())
-          Memo.withScratch(s, s"graph_del_$id")(
-              Similarity.assignVectors(vecs, centroids)
-                .select("c_id", "vec_id", "v", "nrm")) { delIdx =>
-            s.sql(s"REFRESH TABLE $assignIndexTable")
-            // the ASSIGNMENT index keeps the 2^40 churn seq domain (its
-            // grow side appends at raw batch ids); the GRAPH delta seq
-            // is monotone per store — see nextGraphSeq
-            IndexChurn.append(s, assignIndexTable, delIdx, "D", seqBase + id)
-            val (fs, _) = graphFs(s, graphDir)
-            val deltaDir = new org.apache.hadoop.fs.Path(
-              s"$graphDir/churn_id=$id")
-            val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
-            if (!fs.exists(marker)) {
-              if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
-              val dirs = committedDeltas(s, graphDir)
-              val base = servedFromDirs(s, dirs)
-              val delQ = delIdx.select(col("vec_id").as("q_id"))
-              // deleted as queries: their whole generation must vanish
-              val goneQ = base.join(delQ, Seq("q_id"), "left_semi")
-                .select("q_id").distinct()
-              // deleted as neighbors: survivors holding an edge to a
-              // deleted vector re-rank over the churned candidate set
-              val affected = base
-                .join(delIdx.select("vec_id"), Seq("vec_id"), "left_semi")
-                .select("q_id").distinct()
-                .join(delQ, Seq("q_id"), "left_anti")
-              // rk = −1 sentinel for EVERY q_id this delta rewrites —
-              // deleted queries AND re-ranked survivors. A survivor whose
-              // probed cells hold no surviving candidate (all neighbors
-              // deleted) yields ZERO repaired rows; without its own
-              // sentinel in the same generation, its OLD rows would keep
-              // winning latest-wins and serve edges into deleted vectors.
-              // Sentinel and repaired rows share one (seq, wsrc), so the
-              // generation pick keeps both and the rk > 0 serve filter
-              // leaves exactly the repaired rows — or nothing, matching
-              // the batch knnGraphChurn (which drops the vector).
-              val sentinels = goneQ.unionByName(affected).distinct()
-                .select(col("q_id"), lit(-1L).as("rk"),
-                  lit(-1L).as("vec_id"), lit(0.0).as("score"))
-              val servedIdx = IndexChurn
-                .served(s, assignIndexTable, Seq("c_id", "vec_id"))
-                .select("c_id", "vec_id", "v", "nrm")
-              val affQ = servedIdx
-                .join(affected.withColumnRenamed("q_id", "vec_id"),
-                  Seq("vec_id"))
-                .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-                  col("nrm").as("q_nrm"))
-              val repaired = Similarity.scoreTopK(servedIdx,
-                Similarity.withProbes(affQ, cents, nprobe), k)
-              repaired.unionByName(sentinels)
-                .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
-                .withColumn("wsrc", lit(s"churn_id=$id"))
-                .write.mode("overwrite").parquet(deltaDir.toString)
-              fs.create(marker, true).close()
-              ()
-            }
-          }
+    drain(deletes, checkpointDir) { (batch, id) =>
+      val s = batch.sparkSession
+      val vecs = Similarity.vectorsOf(batch.toDF())
+      Memo.withScratch(s, s"graph_del_$id")(
+          Similarity.assignVectors(vecs, centroids)
+            .select("c_id", "vec_id", "v", "nrm")) { delIdx =>
+        s.sql(s"REFRESH TABLE $assignIndexTable")
+        // the ASSIGNMENT index keeps the 2^40 churn seq domain (its
+        // grow side appends at raw batch ids); the GRAPH delta seq
+        // is monotone per store — see nextSeqFromDirs
+        IndexChurn.append(s, assignIndexTable, delIdx, "D", seqBase + id)
+        val (fs, _) = graphFs(s, graphDir)
+        val deltaDir = new org.apache.hadoop.fs.Path(
+          s"$graphDir/churn_id=$id")
+        val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
+        if (!fs.exists(marker)) {
+          if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
+          val dirs = committedDeltas(s, graphDir)
+          val base = servedFromDirs(s, dirs)
+          val delQ = delIdx.select(col("vec_id").as("q_id"))
+          // deleted as queries: their whole generation must vanish
+          val goneQ = base.join(delQ, Seq("q_id"), "left_semi")
+            .select("q_id").distinct()
+          // deleted as neighbors: survivors holding an edge to a
+          // deleted vector re-rank over the churned candidate set
+          val affected = base
+            .join(delIdx.select("vec_id"), Seq("vec_id"), "left_semi")
+            .select("q_id").distinct()
+            .join(delQ, Seq("q_id"), "left_anti")
+          // rk = −1 sentinel for EVERY q_id this delta rewrites —
+          // deleted queries AND re-ranked survivors. A survivor whose
+          // probed cells hold no surviving candidate (all neighbors
+          // deleted) yields ZERO repaired rows; without its own
+          // sentinel in the same generation, its OLD rows would keep
+          // winning latest-wins and serve edges into deleted vectors.
+          // Sentinel and repaired rows share one (seq, wsrc), so the
+          // generation pick keeps both and the rk > 0 serve filter
+          // leaves exactly the repaired rows — or nothing, matching
+          // the batch knnGraphChurn (which drops the vector).
+          val sentinels = goneQ.unionByName(affected).distinct()
+            .select(col("q_id"), lit(-1L).as("rk"),
+              lit(-1L).as("vec_id"), lit(0.0).as("score"))
+          val servedIdx = IndexChurn
+            .served(s, assignIndexTable, Seq("c_id", "vec_id"))
+            .select("c_id", "vec_id", "v", "nrm")
+          val affQ = servedIdx
+            .join(affected.withColumnRenamed("q_id", "vec_id"),
+              Seq("vec_id"))
+            .select(col("vec_id").as("q_id"), col("v").as("q_v"),
+              col("nrm").as("q_nrm"))
+          val repaired = Similarity.scoreTopK(servedIdx,
+            Similarity.withProbes(affQ, cents, nprobe), k)
+          repaired.unionByName(sentinels)
+            .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
+            .withColumn("wsrc", lit(s"churn_id=$id"))
+            .write.mode("overwrite").parquet(deltaDir.toString)
+          fs.create(marker, true).close()
+          ()
         }
       }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
   }
-
-  def runForeachBatchParquet(spark: SparkSession, df: DataFrame,
-      outDir: String): Unit = {
-    val q = df.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** Production-shaped sink: checkpointed Kafka writer (not runnable in
-    * the offline harness — zero egress; exercised only as plan/config). */
-  def kafkaSink(df: DataFrame, brokers: String, topic: String,
-      checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
 }

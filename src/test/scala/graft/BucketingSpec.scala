@@ -8,26 +8,6 @@ class BucketingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf
 
-  test("bucketed join runs with zero exchanges and matches plain join") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      Bucketing.writeBucketed(spark, sf)
-      val joined = Bucketing.colocatedJoin(spark)
-      val n = joined.count()
-      val plan = Shim.executedPlan(joined).toString
-      assert(!plan.contains("Exchange"), s"shuffle in plan:\n$plan")
-      val plain = Tables.load(spark, sf, "orders")
-        .join(Tables.load(spark, sf, "customer"),
-          org.apache.spark.sql.functions.col("o_custkey") ===
-            org.apache.spark.sql.functions.col("c_custkey")).count()
-      assert(n == plain)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS orders_bkt")
-      spark.sql("DROP TABLE IF EXISTS customer_bkt")
-    }
-  }
-
   test("bucketed band index: increment probe exchange-free on corpus side") {
     import org.apache.spark.sql.functions.col
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -403,28 +383,5 @@ class BucketingSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
-  }
-
-  test("streaming session windows and stateful totals run end to end") {
-    import graft.streaming.StreamingBackfill
-    val ev = StreamingBackfill.eventsStream(spark, sf)
-    val sessions = StreamingBackfill.runToMemory(spark,
-      StreamingBackfill.sessionWindows(ev), "sess_out")
-    assert(sessions.count() > 0)
-    assert(sessions.filter(
-      org.apache.spark.sql.functions.col("session_end") <
-        org.apache.spark.sql.functions.col("session_start")).count() == 0)
-
-    val totals = StreamingBackfill.runToMemory(spark,
-      StreamingBackfill.statefulRunningTotals(spark,
-        StreamingBackfill.eventsStream(spark, sf)), "tot_out", "append")
-    assert(totals.count() == Tables.load(spark, sf, "events").count())
-    // final per-user count equals the user's event count
-    val last = totals.groupBy("user_id")
-      .agg(org.apache.spark.sql.functions.max("events_so_far").as("n"))
-    val want = Tables.load(spark, sf, "events").groupBy("user_id").count()
-    assert(last.join(want, "user_id")
-      .filter(org.apache.spark.sql.functions.col("n") =!=
-        org.apache.spark.sql.functions.col("count")).count() == 0)
   }
 }

@@ -77,6 +77,31 @@ class DedupSpec extends AnyFunSuite {
       s"only per-row: ${perRow.diff(batch).take(3)}; only batch: ${batch.diff(perRow).take(3)}")
   }
 
+  test("per-row bands probing the corpus bands surface every verified pair") {
+    // the candidate stage of the ingest screen (applyDedupScreenBatch):
+    // new docs banded per row, joined on (band_id, band_key) against the
+    // corpus band table. No recall loss vs batch: every verified
+    // incremental pair is a candidate (also pins the per-row HOF-min
+    // signature ≡ the batch explode+groupBy signature on the harness data)
+    val sf = TestSpark.sf
+    val corpusBands = Dedup.minhashCappedBands(spark, sf)
+      .filter(col("doc_id") % 10 =!= 0)
+      .withColumnRenamed("doc_id", "corpus_id")
+    val newDocs = Tables.load(spark, sf, "documents")
+      .filter(col("doc_id") % 10 === 0)
+    val cands = Dedup.minhashBandsPerRow(newDocs)
+      .join(corpusBands, Seq("band_id", "band_key"))
+      .select("doc_id", "corpus_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // candidates orient new → corpus only (no corpus re-pairing at ingest)
+    assert(cands.forall { case (n, c) => n % 10 == 0 && c % 10 != 0 })
+    val verified = Dedup.incrementalPairs(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(verified.nonEmpty, "fixture has no cross-set near-dups")
+    assert(verified.subsetOf(cands),
+      s"missed candidates: ${verified.diff(cands)}")
+  }
+
   test("simhash: identical docs equal, near-dups close, unrelated far") {
     val sh = Dedup.simhash(spark, fixtureDir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -78,10 +78,6 @@ class FormatsSpec extends AnyFunSuite {
       assert(micros.toSeq == Seq(1704067200000000L, 1704067201000000L,
         1704067202000000L))
     } finally spark.conf.set("spark.sql.session.timeZone", tzBefore)
-    // batch and stream read the SAME bytes to the SAME schema
-    assert(!Tables.eventsStoredAsLongNanos(spark, dir))
-    val stream = graft.streaming.StreamingBackfill.eventsStream(spark, dir)
-    assert(stream.schema("ts").dataType == TimestampType)
   }
 
   test("data drift fails loudly at load with a one-line message") {

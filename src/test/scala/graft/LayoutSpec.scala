@@ -1,46 +1,13 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Layout
 
-/** Z-order layout: the pruning claim, executed — per-file min-max
-  * extents (what a reader's stats-based pruning sees) under a z-value
-  * clustering vs a single-column clustering of the same data. */
+/** Z-order key: the bit interleave on known cells, and the native
+  * expression against its composed-expression witness. */
 class LayoutSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  test("z-order files prune box queries on BOTH dimensions; stripes on one") {
-    val df = spark.range(0, 65536).select(
-      (col("id") % 256).as("x"), (col("id") / 256).cast("long").as("y"))
-    val zdir = Files.createTempDirectory("zlay").toString
-    val xdir = Files.createTempDirectory("xlay").toString
-    Layout.writeClustered(df, zdir, Layout.zValue(col("x"), col("y"), 8), 16)
-    Layout.writeClustered(df, xdir, col("x"), 16)
-    assert(spark.read.parquet(zdir).count() === 65536L)
-
-    val ze = Layout.fileExtents(spark, zdir, "x", "y").cache()
-    val xe = Layout.fileExtents(spark, xdir, "x", "y").cache()
-
-    // y-only box (x unconstrained): the x-striped layout can prune
-    // NOTHING; z-order touches only the low-y row of tiles
-    val (zy, ztot) = Layout.filesTouched(ze, 0, 255, 0, 31)
-    val (xy, xtot) = Layout.filesTouched(xe, 0, 255, 0, 31)
-    assert(ztot === 16L && xtot === 16L)
-    assert(xy === xtot)
-    assert(zy <= ztot / 2)
-
-    // x-only box: z-order still prunes (the symmetric claim — one
-    // layout serves both dimensions)
-    val (zx, _) = Layout.filesTouched(ze, 0, 31, 0, 255)
-    assert(zx <= ztot / 2)
-
-    // tight 2-D box: close to a single tile
-    val (zb, _) = Layout.filesTouched(ze, 0, 63, 0, 63)
-    assert(zb <= 6)
-    ze.unpersist(); xe.unpersist()
-  }
 
   test("zValue interleaves bits (known cells) and orders like the curve") {
     import spark.implicits._

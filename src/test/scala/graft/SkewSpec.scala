@@ -3,24 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.graftshim.Shim
-import graft.operators.Skew
 
 class SkewSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf
-
-  test("salted join equals plain join on a skewed key distribution") {
-    import spark.implicits._
-    // 90% of big rows share one hot key
-    val big = (1L to 5000L)
-      .map(i => (if (i % 10 == 0) i % 7 else 999L, i)).toDF("k", "payload")
-    val small = (0L to 1000L).map(i => (i, s"dim$i")).toDF("k2", "name")
-    val salted = Skew.saltedJoin(big, small, "k", "k2", factor = 8)
-      .select("k", "payload", "name").collect().toSet
-    val plain = big.join(small, col("k") === col("k2"))
-      .select("k", "payload", "name").collect().toSet
-    assert(salted == plain && salted.nonEmpty)
-  }
 
   test("date-partitioned write prunes partitions at read") {
     val wh = java.nio.file.Files.createTempDirectory("partwh").toString
