@@ -130,7 +130,7 @@ object KillProbe {
           .option("recursiveFileLookup", "true")
           .parquet(s"$work/stream")
         println("INGEST_BEGIN")
-        streaming.StreamingBackfill.fullIngestLoop(spark, stream,
+        streaming.StreamingBackfill.fullIngestLoop(stream,
           s"$work/corpus", bandTable, postTable, assignTable, centroids,
           embedderFor(emb), s"$work/reports",
           checkpointDir = s"$work/ckpt")
@@ -216,7 +216,7 @@ object KillProbe {
           .option("recursiveFileLookup", "true")
           .parquet(s"$work/stream")
         println("INGEST_BEGIN")
-        streaming.StreamingBackfill.churnIngestLoop(spark, stream,
+        streaming.StreamingBackfill.churnIngestLoop(stream,
           churnPostTable, churnAssignTable, centroids, embedderFor(emb),
           doclenTable = Some(churnDlTable), checkpointDir = s"$work/ckpt")
         println("INGEST_DONE")
@@ -286,7 +286,7 @@ object KillProbe {
           .option("recursiveFileLookup", "true")
           .parquet(s"$work/stream")
         println("INGEST_BEGIN")
-        streaming.StreamingBackfill.graphIngestLoop(spark, stream,
+        streaming.StreamingBackfill.graphIngestLoop(stream,
           graphAssignTable, centroids, s"$work/graph",
           checkpointDir = s"$work/ckpt")
         println("INGEST_DONE")
@@ -314,7 +314,7 @@ object KillProbe {
         val embRaw = Tables.load(spark, sf, "embeddings")
         embRaw.coalesce(1).write.mode("overwrite")
           .parquet(s"$work/ingest/all")
-        streaming.StreamingBackfill.graphIngestLoop(spark,
+        streaming.StreamingBackfill.graphIngestLoop(
           spark.readStream.schema(embRaw.schema)
             .option("maxFilesPerTrigger", "1")
             .option("recursiveFileLookup", "true")
@@ -337,7 +337,7 @@ object KillProbe {
           .option("recursiveFileLookup", "true")
           .parquet(s"$work/stream")
         println("INGEST_BEGIN")
-        streaming.StreamingBackfill.graphChurnLoop(spark, stream,
+        streaming.StreamingBackfill.graphChurnLoop(stream,
           graphAssignTable, centroids, s"$work/graph",
           checkpointDir = s"$work/ckpt")
         println("INGEST_DONE")
@@ -387,7 +387,7 @@ object KillProbe {
           .option("recursiveFileLookup", "true")
           .parquet(s"$work/stream")
         println("INGEST_BEGIN")
-        streaming.StreamingBackfill.cdcUpsertLoop(spark, stream,
+        streaming.StreamingBackfill.cdcUpsertLoop(stream,
           s"$work/store", checkpointDir = s"$work/ckpt")
         println("INGEST_DONE")
 

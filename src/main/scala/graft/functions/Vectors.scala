@@ -25,8 +25,12 @@ object Vectors {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity in [-1, 1]; null-safe on zero vectors. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Exact cosine over PRECOMPUTED norms, `a·b / (na·nb)` — one dot
+    * product per pair, the norms computed once per vector. The ANN
+    * family's one exact cosine: the DuckDB oracles replay this exact
+    * expression tree (one dot, one product of norms, one division). */
+  def cosine(a: Column, na: Column, b: Column, nb: Column): Column =
+    dot(a, b) / (na * nb)
 
   /** Cast an `array<float>` column to `array<double>` for exact math. */
   def asDouble(a: Column): Column = a.cast("array<double>")

@@ -24,17 +24,13 @@ import graft.functions.{Vectors => V}
   * encoding AND the ADC scan exactly).
   */
 object Quantize {
-  import Similarity.topKTail
+  import Similarity.{asQueries, queriesOf, serveTopK}
 
   /** PQ geometry: M subspaces of SubDim dims, Ksub centroids each —
     * 8 bytes of code per vector, 16-entry lookup tables per subspace. */
   val M = 8
   val Ksub = 16
   val SubDim = 8
-  // ONE query-set size across the ANN family: recall comparisons
-  // between the exact, IVF and PQ serves assume identical query sets,
-  // and a privately duplicated constant could silently fork them
-  private def NumQueries = Similarity.NumQueries
 
   // THE (vec_id, v, nrm) vector frame — Similarity's, not a private
   // re-implementation: PQ codes and IVF assignments join on vec_id
@@ -156,11 +152,17 @@ object Quantize {
   def pqIndexTable(spark: SparkSession, dir: String,
       iters: Int = 2): DataFrame =
     Memo.table(spark, dir, s"pq_index_$iters") {
-      val e = emb(spark, dir)
-      assignCodes(subvectors(e), trainCodebooks(spark, dir, iters))
-        .join(e.select(col("vec_id"), col("nrm")), "vec_id")
-        .select("vec_id", "nrm", "sub", "code")
+      encode(emb(spark, dir), trainCodebooks(spark, dir, iters))
     }
+
+  /** THE PQ encode: each (vec_id, v, nrm) vector's M nearest-entry codes
+    * against codebook `cb`, with its true norm, as
+    * (vec_id, nrm, sub, code) — the long-format index every PQ and OPQ
+    * build writes. */
+  private def encode(e: DataFrame, cb: DataFrame): DataFrame =
+    assignCodes(subvectors(e), cb)
+      .join(e.select(col("vec_id"), col("nrm")), "vec_id")
+      .select("vec_id", "nrm", "sub", "code")
 
   /** Harness query `pq_codes`: the PQ encoding itself — proves the
     * trained codebooks and nearest-entry assignment are
@@ -169,10 +171,6 @@ object Quantize {
     pqIndexTable(spark, dir)
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
       .orderBy("vec_id", "sub")
-
-  /** The standard query set with norms — shared by every serve. */
-  private def queriesOf(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") < NumQueries)
 
   /** THE per-query ADC lookup table: each query's M subvectors dotted
     * against all Ksub codebook entries, rounded at 10 — factored so
@@ -209,18 +207,35 @@ object Quantize {
     adcServe(index,
       lutOf(queriesOf(emb(spark, dir)), trainCodebooks(spark, dir, iters)), k)
 
-  /** THE ADC rank kernel: broadcast LUT join, decimal-exact M-addend
-    * sums, true-norm division, top-k tail — shared by the plain-PQ and
-    * OPQ serves (one arithmetic definition, as with [[lutOf]]). */
+  /** THE ADC serve over a long-format index: broadcast LUT join, the
+    * [[adcFold]], the [[Similarity.serveTopK]] tail — shared by the
+    * plain-PQ and OPQ serves (one arithmetic definition, as with
+    * [[lutOf]]). */
   private def adcServe(index: DataFrame, lut: DataFrame, k: Int): DataFrame =
-    topKTail(
-      index.join(broadcast(lut), Seq("sub", "code"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(exactUnorderedSum(col("ip")).as("ips"),
-          first(col("nrm")).as("nrm"), first(col("q_nrm")).as("q_nrm"))
-        .withColumn("cos",
-          col("ips") / (col("q_nrm") * col("nrm"))), k)
+    serveTopK(adcFold(index.join(broadcast(lut), Seq("sub", "code")),
+      Seq("q_id", "vec_id")), k)
+
+  /** THE ADC fold over (query, code) rows joined to their LUT entries
+    * `ip`: self-pairs dropped, each pair's M addends summed through
+    * DECIMAL(38,18) (exact, so order-free), the norms carried by
+    * `first`, then ONE IEEE division by the true norms — (q_id, vec_id,
+    * score). `keys` ⊇ (q_id, vec_id): the IVF serves add the bucket
+    * column c_id so the fold rides the bucketing exchange-free ((q_id,
+    * vec_id) is unique across c_id, so the extra key changes nothing).
+    * `residual` adds the per-(query, list) q·c scalar `qc_ip` to the
+    * decimal sum's double image before dividing — one IEEE add,
+    * deterministic on both engines. */
+  private def adcFold(pairs: DataFrame, keys: Seq[String],
+      residual: Boolean = false): DataFrame = {
+    val carried = (if (residual) Seq("qc_ip") else Nil) ++ Seq("nrm", "q_nrm")
+    val ips = if (residual) col("ips") + col("qc_ip") else col("ips")
+    pairs.filter(col("vec_id") =!= col("q_id"))
+      .groupBy(keys.map(col): _*)
+      .agg(exactUnorderedSum(col("ip")).as("ips"),
+        carried.map(c => first(col(c)).as(c)): _*)
+      .select(col("q_id"), col("vec_id"),
+        (ips / (col("q_nrm") * col("nrm"))).as("score"))
+  }
 
   /** The PACKED compressed index: ONE row per vector —
     * (vec_id, nrm, codes array ordered by subspace) — the layout PQ
@@ -252,8 +267,9 @@ object Quantize {
     * ordered fold equals the long format's unordered decimal sum and
     * the row shares `sim_topk_pq`'s oracle: the hash-equality proves
     * the packed layout serves identically. No join on (sub, code), no
-    * n·M-row aggregation — the only shuffle left is the per-query
-    * top-k window, the same one the brute-force scan pays. */
+    * n·M-row aggregation — the only shuffle left is the rank kernel's
+    * bounded per-query TopK buffers, the same one the brute-force scan
+    * pays. */
   def pqPackedTopK(spark: SparkSession, dir: String, k: Int = 10,
       iters: Int = 2): DataFrame = {
     // collected per serve (r18, reverting the r17 artifact cache): the
@@ -275,13 +291,13 @@ object Quantize {
         }.sortBy(_._1)
     import spark.implicits._
     val lutDf = luts.toDF("q_id", "q_nrm", "tbl")
-    topKTail(pqPackedIndexTable(spark, dir, iters)
+    serveTopK(pqPackedIndexTable(spark, dir, iters)
       .crossJoin(broadcast(lutDf))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (exactOrderedFold(s => element_at(element_at(col("tbl"), s + 1),
           element_at(col("codes"), s + 1) + 1)) /
-          (col("q_nrm") * col("nrm"))).as("cos")), k)
+          (col("q_nrm") * col("nrm"))).as("score")), k)
   }
 
   /** THE packed exact-fold kernel: the ordered M-addend fold every
@@ -336,9 +352,7 @@ object Quantize {
     val slice =
       if (newBatch) e.filter(col("vec_id") % mod === 0)
       else e.filter(col("vec_id") % mod =!= 0)
-    assignCodes(subvectors(slice), trainCodebooks(spark, dir, iters))
-      .join(slice.select(col("vec_id"), col("nrm")), "vec_id")
-      .select("vec_id", "nrm", "sub", "code")
+    encode(slice, trainCodebooks(spark, dir, iters))
   }
 
   /** Harness query `sim_topk_pq_maintained`: ADC served from the
@@ -392,14 +406,11 @@ object Quantize {
   private def rerankOver(spark: SparkSession, dir: String,
       cand: DataFrame, k: Int): DataFrame = {
     val e = emb(spark, dir)
-    val queries = queriesOf(e)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"))
-    topKTail(e.join(broadcast(cand), "vec_id")
-      .join(broadcast(queries), "q_id")
+    serveTopK(e.join(broadcast(cand), "vec_id")
+      .join(broadcast(asQueries(queriesOf(e))), "q_id")
       .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm")))
-          .as("cos")), k)
+        V.cosine(col("q_v"), col("q_nrm"), col("v"), col("nrm"))
+          .as("score")), k)
   }
 
   /** Harness query `sim_topk_ivfpq`: IVF+PQ — Jégou et al.'s IVFADC,
@@ -414,8 +425,9 @@ object Quantize {
     * |Q|·nprobe probe set — the same driver round-trip as the ADC
     * lookup tables) that BUCKET-PRUNES the scan to the probed lists'
     * files, and the ADC aggregation groups on keys ⊇ c_id so it rides
-    * the bucketing exchange-free; the only shuffle is the per-query
-    * top-k window over the probed candidates. Oracle-gated bit-exactly:
+    * the bucketing exchange-free; the only shuffle is the rank
+    * kernel's bounded per-query TopK buffers over the probed candidates
+    * ([[Similarity.serveTopK]]). Oracle-gated bit-exactly:
     * the DuckDB chain replays coarse training, PQ training, encoding,
     * probing AND the decimal-exact ADC fold. */
   def pqIvfTopK(spark: SparkSession, dir: String, k: Int = 10,
@@ -423,17 +435,9 @@ object Quantize {
     val table = graft.sources.Bucketing.ensureIvfPqIndex(spark, dir, iters)
     val queries = queriesOf(emb(spark, dir))
     val lut = lutOf(queries, trainCodebooks(spark, dir, iters))
-    topKTail(probedScan(spark, dir, table, queries, nprobe, iters)
-      .join(broadcast(lut), Seq("q_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      // grouping keys ⊇ c_id (the bucket column): the partial+final sum
-      // runs inside the probed buckets with no exchange; (q_id, vec_id)
-      // is unique across c_id so the extra key changes nothing
-      .groupBy("c_id", "q_id", "vec_id")
-      .agg(exactUnorderedSum(col("ip")).as("ips"),
-        first(col("nrm")).as("nrm"), first(col("q_nrm")).as("q_nrm"))
-      .withColumn("cos",
-        col("ips") / (col("q_nrm") * col("nrm"))), k)
+    serveTopK(adcFold(probedScan(spark, dir, table, queries, nprobe, iters)
+      .join(broadcast(lut), Seq("q_id", "sub", "code")),
+      Seq("c_id", "q_id", "vec_id")), k)
   }
 
   /** THE coarse-probed scan of a c_id-bucketed IVF catalog `table`,
@@ -456,9 +460,7 @@ object Quantize {
       prep: DataFrame => DataFrame = identity): DataFrame = {
     val cents = Similarity.centroidLiterals(spark, dir, iters)
     val centV = typedlit(cents.map(c => c._1 -> c._2).toMap)
-    val probes = Similarity.withProbes(
-        queries.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-          col("nrm").as("q_nrm")), cents, nprobe)
+    val probes = Similarity.withProbes(asQueries(queries), cents, nprobe)
       .select(col("q_id"), col("c_id"),
         round(V.dot(col("q_v"), element_at(centV, col("c_id"))), 10))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -556,18 +558,9 @@ object Quantize {
       graft.sources.Bucketing.ensureIvfPqResidualIndex(spark, dir, iters)
     val queries = queriesOf(emb(spark, dir))
     val lut = lutOf(queries, residualCodebooks(spark, dir, iters))
-    topKTail(probedScan(spark, dir, table, queries, nprobe, iters)
-      .join(broadcast(lut), Seq("q_id", "sub", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("c_id", "q_id", "vec_id")
-      .agg(exactUnorderedSum(col("ip")).as("lutsum"),
-        first(col("qc_ip")).as("qc_ip"),
-        first(col("nrm")).as("nrm"), first(col("q_nrm")).as("q_nrm"))
-      // the decimal LUT sum is exact; its double image + the rounded
-      // q·c scalar is one IEEE add — deterministic on both engines
-      .withColumn("cos",
-        (col("lutsum") + col("qc_ip")) /
-          (col("q_nrm") * col("nrm"))), k)
+    serveTopK(adcFold(probedScan(spark, dir, table, queries, nprobe, iters)
+      .join(broadcast(lut), Seq("q_id", "sub", "code")),
+      Seq("c_id", "q_id", "vec_id"), residual = true), k)
   }
 
   /** The int8 scalar-quantized (SQ8) index: (vec_id, nrm, scale,
@@ -594,7 +587,9 @@ object Quantize {
             x => round(x * col("scale")).cast("int")).as("codes"))
     }
 
-  /** (q_id, vec_id, cos) over the SQ8 index: integer dot of the code
+  /** THE SQ8 score of (query, vector) pairs carrying (q_id, q_cd,
+    * q_scale, q_nrm) and (vec_id, cd, scale, nrm), self-pairs dropped,
+    * as (q_id, vec_id, score): integer dot of the code
     * arrays, rescaled by the two quantization scales and divided by
     * the TRUE norms (stored per vector, like PQ's). The codes ride as
     * integer-VALUED doubles through the codegen'd [[V.dot]] expression
@@ -606,33 +601,41 @@ object Quantize {
     * 15 s before the codegen'd dot, 3.6 s after, brute 2.5 s),
     * inverting the point of the compressed layout; the one
     * array<int>→array<double> cast is per ROW, before the query cross
-    * join, amortized over |Q| scores. The
+    * join, amortized over |Q| scores ([[withCd]]). The
     * two divisions are pinned left-to-right so the oracle replays the
     * IEEE order. */
-  private def int8Scored(spark: SparkSession, dir: String): DataFrame = {
-    val idx = int8IndexTable(spark, dir)
-      .withColumn("cd", col("codes").cast("array<double>"))
-    val queries = idx.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("cd").as("q_cd"),
-        col("scale").as("q_scale"), col("nrm").as("q_nrm"))
-    idx.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id"))
+  private def int8Score(pairs: DataFrame): DataFrame =
+    pairs.filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (V.dot(col("q_cd"), col("cd"))
           / (col("q_scale") * col("scale"))
-          / (col("q_nrm") * col("nrm"))).as("cos"))
-  }
+          / (col("q_nrm") * col("nrm"))).as("score"))
+
+  /** SQ8 index rows with their codes cast once to integer-valued
+    * doubles (`cd`), per ROW and before any pair join (see
+    * [[int8Score]]). */
+  private def withCd(idx: DataFrame): DataFrame =
+    idx.withColumn("cd", col("codes").cast("array<double>"))
+
+  /** The standard query set's SQ8 rows as the query side of
+    * [[int8Score]]: (q_id, q_cd, q_scale, q_nrm). */
+  private def int8Queries(spark: SparkSession, dir: String): DataFrame =
+    queriesOf(withCd(int8IndexTable(spark, dir)))
+      .select(col("vec_id").as("q_id"), col("cd").as("q_cd"),
+        col("scale").as("q_scale"), col("nrm").as("q_nrm"))
 
   /** Harness query `sim_topk_int8`: brute top-k over the SQ8 index —
     * the compressed comparator to `sim_topk_brute`: same scan shape
-    * (broadcast query set, one pass over the corpus, per-query window),
+    * (broadcast query set, one pass over the corpus, the
+    * [[Similarity.serveTopK]] tail),
     * a quarter of the bytes and integer multiplies in the hot loop.
     * Where PQ's ADC approximates directions through a trained codebook
     * (16 centroids/subspace), SQ8 keeps every dimension at 8-bit
     * precision — higher fidelity, larger scan; QuantizeSpec pins its
     * recall@10 against the exact serve above PQ's. */
   def int8TopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    topKTail(int8Scored(spark, dir), k)
+    serveTopK(int8Score(withCd(int8IndexTable(spark, dir))
+      .crossJoin(broadcast(int8Queries(spark, dir)))), k)
 
   /** Harness query `sim_topk_int8_rerank`: the production SQ8 recipe —
     * quantized shortlist (poolK), exact-cosine re-rank through the
@@ -651,28 +654,19 @@ object Quantize {
     * doubles, full per-dimension resolution unlike PQ's 16-centroid
     * subspaces, NO training beyond the coarse centroids. The scored
     * dot rides the same integer-valued-doubles kernel as
-    * [[int8Scored]] (exact ≤ 2²⁰, no decimal machinery), so the oracle
+    * [[int8Score]] (exact ≤ 2²⁰, no decimal machinery), so the oracle
     * replays coarse training + probing + quantization + the fold
-    * bit-exactly. Only shuffle: the per-query top-k window. */
+    * bit-exactly. Only shuffle: the rank kernel's bounded per-query
+    * TopK buffers ([[Similarity.serveTopK]]). */
   def int8IvfTopK(spark: SparkSession, dir: String, k: Int = 10,
       nprobe: Int = 8, iters: Int = 2): DataFrame = {
     val table = graft.sources.Bucketing.ensureIvfSq8Index(spark, dir, iters)
-    val q8 = int8IndexTable(spark, dir).filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        col("codes").cast("array<double>").as("q_cd"),
-        col("scale").as("q_scale"), col("nrm").as("q_nrm"))
     // per-ROW cast, below the probe join — a vector probed by several
     // queries is duplicated by the join, so casting after it would
-    // re-run the 64-element conversion per scored pair (the same
-    // amortization int8Scored applies)
-    topKTail(probedScan(spark, dir, table, queriesOf(emb(spark, dir)),
-        nprobe, iters, _.withColumn("cd", col("codes").cast("array<double>")))
-      .join(broadcast(q8), "q_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_cd"), col("cd"))
-          / (col("q_scale") * col("scale"))
-          / (col("q_nrm") * col("nrm"))).as("cos")), k)
+    // re-run the 64-element conversion per scored pair
+    serveTopK(int8Score(probedScan(spark, dir, table,
+        queriesOf(emb(spark, dir)), nprobe, iters, withCd)
+      .join(broadcast(int8Queries(spark, dir)), "q_id")), k)
   }
 
   // ------------------------------------------------------------- OPQ
@@ -749,10 +743,7 @@ object Quantize {
   def opqIndexTable(spark: SparkSession, dir: String,
       iters: Int = 2): DataFrame =
     Memo.table(spark, dir, s"opq_index_$iters") {
-      val e = rotatedEmb(spark, dir)
-      assignCodes(subvectors(e), opqCodebooks(spark, dir, iters))
-        .join(e.select(col("vec_id"), col("nrm")), "vec_id")
-        .select("vec_id", "nrm", "sub", "code")
+      encode(rotatedEmb(spark, dir), opqCodebooks(spark, dir, iters))
     }
 
   /** Harness query `sim_topk_opq`: ADC top-k over the OPQ index —
@@ -859,10 +850,7 @@ object Quantize {
     val cb = trainCodebooksOver(spark, dir,
       s"${memoTag}_serve_cb_${M}_${Ksub}_${iters}_$hFp", iters,
       subvectors(e))
-    val index = assignCodes(subvectors(e), cb)
-      .join(e.select(col("vec_id"), col("nrm")), "vec_id")
-      .select("vec_id", "nrm", "sub", "code")
-    adcServe(index, lutOf(queriesOf(e), cb), k)
+    adcServe(encode(e, cb), lutOf(queriesOf(e), cb), k)
   }
 
   def int8Quantize(spark: SparkSession, dir: String): DataFrame = {

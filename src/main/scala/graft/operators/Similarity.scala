@@ -12,8 +12,9 @@ import graft.functions.{Vectors => V}
   * Two paths:
   *  - [[bruteForceTopK]] — exact baseline: broadcast the (small) query
   *    set against every vector; cost O(|Q|·n) codegen'd dot products
-  *    ([[graft.functions.DotProduct]]), embarrassingly parallel, then a
-  *    per-query top-k window. Correct at any n while |Q| is bounded.
+  *    ([[graft.functions.DotProduct]]), embarrassingly parallel, then
+  *    each query's top-k through the one rank kernel ([[rankTopK]]).
+  *    Correct at any n while |Q| is bounded.
   *  - [[ivfTopK]] — the scale path: IVF-style coarse quantization with a
   *    FIXED number of centroids (C=64 — independent of n, so assignment
   *    stays O(n·C)). Vectors go to their nearest centroid's inverted
@@ -45,7 +46,7 @@ object Similarity {
       .filter(col("nrm") > 0)
 
   /** Argmax-cosine centroid assignment as ONE aggregation instead of a
-    * `row_number` window over the n×C exploded table: `max` over a
+    * rank window over the n×C exploded table: `max` over a
     * lexicographic (c_cos, −c_id) struct replicates the
     * (cos DESC, c_id ASC) window tie-break exactly, but gets map-side
     * partial aggregation — the shuffle carries ~n combined rows instead
@@ -156,31 +157,63 @@ object Similarity {
 
   /** Exact top-k cosine for query vectors (vec_id < NumQueries). */
   def bruteForceTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val e = emb(spark, dir)
-    topKTail(e.crossJoin(broadcast(queriesOf(e)))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))).as("cos")), k)
+    serveTopK(exactScores(emb(spark, dir)
+      .crossJoin(broadcast(standardQueries(spark, dir)))), k)
   }
 
   /** Each query's first `k` rows of a scored (q_id, vec_id, cos, …)
-    * frame under the (cos DESC, vec_id) window, numbered `rk` from 1 —
-    * the one rank definition behind [[topKTail]] and the MMR pools. */
+    * frame under the (cos DESC, vec_id) window, numbered `rk` from 1.
+    * Only the MMR pools rank this way: their rows carry the vectors the
+    * greedy step reads, which the [[rankTopK]] kernel's (score, id)
+    * buffers do not. */
   private def rankCut(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
   }
 
-  /** THE per-query top-k tail the exact and compressed serves rank
-    * through: [[rankCut]], round-6, (q_id, rk) order — one definition
-    * so a tie-break or rounding tweak cannot desynchronize serves that
-    * must hash-equal each other. Input: (q_id, vec_id, cos). */
-  private[operators] def topKTail(scored: DataFrame, k: Int): DataFrame =
-    rankCut(scored, k)
-      .select(col("q_id"), col("rk"), col("vec_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy("q_id", "rk")
+  /** THE rank kernel of the ANN family: each query's top `k` rows of a
+    * scored (q_id, vec_id, score) frame as (q_id, rk, vec_id, score),
+    * `rk` from 1, through the bounded-state [[graft.functions.TopK]]
+    * aggregate — tie-for-tie the (score DESC, vec_id) window, without
+    * sorting or shuffling the scored pairs (see [[knnGraph]]). Scores
+    * stay RAW so merge-law callers ([[graphReverseMerge]]) compare
+    * against freshly scored candidates without a rounding seam. k ≤ 0
+    * returns zero rows of the same schema (TopK itself requires
+    * k > 0). */
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val top = scored.groupBy("q_id")
+      .agg(graft.functions.TopK.top_k_by_score(
+        struct(col("score"), col("vec_id")), math.max(k, 1)).as("nn"))
+      .select(col("q_id"), posexplode(col("nn")).as(Seq("pos", "s")))
+      .select(col("q_id"), (col("pos") + 1).cast("long").as("rk"),
+        col("s.id").as("vec_id"), col("s.score").as("score"))
+    if (k > 0) top else top.limit(0)
+  }
+
+  /** A ranked (q_id, rk, vec_id, score) frame as served:
+    * (q_id, rk, vec_id, cos) with the score rounded to 6 — the family's
+    * one presentation rounding. */
+  private[graft] def presented(top: DataFrame): DataFrame =
+    top.select(col("q_id"), col("rk"), col("vec_id"),
+      round(col("score"), 6).as("cos"))
+
+  /** THE serve tail every bounded `sim_topk_*` serve ends in: the
+    * [[rankTopK]] kernel, [[presented]], and the (q_id, rk) order
+    * bounded by `maxQueries`·k ([[ranked]]) — one definition, so a
+    * tie-break or rounding tweak cannot desynchronize serves that must
+    * hash-equal each other. Input: (q_id, vec_id, score). */
+  private[operators] def serveTopK(scored: DataFrame, k: Int,
+      maxQueries: Long = NumQueries): DataFrame =
+    ranked(presented(rankTopK(scored, k)), "q_id", maxQueries * k)
+
+  /** The exact cosine of every (query, candidate) pair of a frame
+    * carrying (q_id, q_v, q_nrm, vec_id, v, nrm), self-pairs dropped, as
+    * (q_id, vec_id, score). */
+  private def exactScores(pairs: DataFrame): DataFrame =
+    pairs.filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"),
+        V.cosine(col("q_v"), col("q_nrm"), col("v"), col("nrm")).as("score"))
 
   /** Memoized SAMPLE-centroid assignment — the untrained IVF's
     * persisted index state. Like [[assignmentTable]] (the trained
@@ -204,8 +237,8 @@ object Similarity {
     val cents = Memo.artifact(spark, dir, s"cent_lit_sample_$NumCentroids") {
       centroidArtifact(seedCentroids(emb(spark, dir), NumCentroids))
     }
-    probeTopK(sampleAssignmentTable(spark, dir), queriesOf(emb(spark, dir)),
-      cents, k, nprobe, NumQueries)
+    probeTopK(sampleAssignmentTable(spark, dir),
+      standardQueries(spark, dir), cents, k, nprobe, NumQueries)
   }
 
   /** IVF over Lloyd-trained spherical k-means centroids, served from
@@ -215,36 +248,41 @@ object Similarity {
     * family). */
   def ivfTopKTrained(spark: SparkSession, dir: String, k: Int = 10,
       nprobe: Int = 8, iters: Int = 3): DataFrame =
-    probeTopK(assignmentTable(spark, dir, iters),
-      queriesOf(emb(spark, dir)),
+    probeTopK(assignmentTable(spark, dir, iters), standardQueries(spark, dir),
       centroidLiterals(spark, dir, iters), k, nprobe, NumQueries)
 
-  /** The standard bounded serving query set of a (vec_id, v, nrm)
-    * frame: at most `NumQueries` query ids, vec_id being non-negative by
-    * the corpus contract (as doc_id is). */
-  private def queriesOf(e: DataFrame): DataFrame =
+  /** The standard bounded serving query set of any vec_id-keyed frame
+    * (vectors, codes): at most `NumQueries` query ids, vec_id being
+    * non-negative by the corpus contract (as doc_id is). One definition
+    * for every serve, exact and compressed, so recall comparisons
+    * between them always rank the same queries. */
+  private[operators] def queriesOf(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"))
+
+  /** A (vec_id, v, nrm) frame as the query side of a scored pair:
+    * (q_id, q_v, q_nrm). */
+  private[graft] def asQueries(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("q_id"), col("v").as("q_v"),
+      col("nrm").as("q_nrm"))
+
+  /** The standard query set of the corpus as the query side. */
+  private def standardQueries(spark: SparkSession, dir: String): DataFrame =
+    asQueries(queriesOf(emb(spark, dir)))
 
   /** The bounded-query IVF serve every `sim_topk_*` probe path shares:
     * each of at most `maxQueries` queries picks its `nprobe` nearest
     * centroids from the driver-side codebook ([[withProbes]] — a narrow
     * map, no centroid join, no window), the broadcast probe rows scan
     * only those inverted lists of `assigned`, and each query keeps its
-    * exact cosine top-k through the bounded-state TopK aggregate
-    * ([[scoreTopK]]; tie-for-tie the (cos DESC, vec_id) window). The
-    * output sort is bounded by the exact row count maxQueries·k, so it
-    * is a TakeOrderedAndProject inside the result job: three jobs per
+    * exact cosine top-k through [[serveTopK]]. The output sort is
+    * bounded by the exact row count maxQueries·k, so it is a
+    * TakeOrderedAndProject inside the result job: three jobs per
     * serve — the probe broadcast, the scan's shuffle, the result. */
   private def probeTopK(assigned: DataFrame, queries: DataFrame,
       cents: Array[(Long, Seq[Double], Double)], k: Int, nprobe: Int,
       maxQueries: Long): DataFrame =
-    ranked(
-      scoreTopK(assigned, broadcast(withProbes(queries, cents, nprobe)), k)
-        .select(col("q_id"), col("rk"), col("vec_id"),
-          round(col("score"), 6).as("cos")),
-      "q_id", maxQueries * k)
+    serveTopK(exactScores(assigned.join(
+      broadcast(withProbes(queries, cents, nprobe)), "c_id")), k, maxQueries)
 
   /** A serve's (query, rk) output order, bounded by `rows`, the exact
     * upper bound of its row count (|queries|·k): a sort under a limit
@@ -277,7 +315,7 @@ object Similarity {
     *  - takes each query's top-k via the bounded-state
     *    [[graft.functions.TopK]] aggregate, NOT a window: the scored
     *    candidate table (~n·nprobe·avg_list pairs) is the irreducible
-    *    scoring work, but a row_number window would also SORT and
+    *    scoring work, but a rank window would also SORT and
     *    SHUFFLE all of it — measured as a 2.5-billion-row sort at the
     *    100× probe. The aggregate's map-side partials cap the shuffle
     *    at one k-element buffer per (query, partition).
@@ -512,38 +550,20 @@ object Similarity {
         (-col("p.neg_id")).as("c_id"))
   }
 
-  /** Score probed inverted lists and keep each query's top-k via the
-    * bounded-state [[graft.functions.TopK]] aggregate (window-free — see
-    * [[knnGraph]]). Returns RAW (unrounded) scores so merge-law callers
-    * ([[knnGraphMaintained]]) can compare against freshly scored
-    * candidates without a rounding seam; presentation paths round at
-    * the edge. */
+  /** Score probed inverted lists and keep each query's top-k through the
+    * [[rankTopK]] kernel, RAW scores (presentation paths round at the
+    * edge). */
   private[graft] def scoreTopK(index: DataFrame, probes: DataFrame,
       k: Int): DataFrame =
-    index.join(probes, "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm")))
-          .as("score"))
-      .groupBy("q_id")
-      .agg(graft.functions.TopK.top_k_by_score(
-        struct(col("score"), col("vec_id")), k).as("nn"))
-      .select(col("q_id"), posexplode(col("nn")).as(Seq("pos", "s")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rk"),
-        col("s.id").as("vec_id"), col("s.score").as("score"))
+    rankTopK(exactScores(index.join(probes, "c_id")), k)
 
   private[graft] def knnGraphBuild(spark: SparkSession, dir: String, k: Int,
       nprobe: Int, iters: Int): DataFrame = {
     val table = graft.sources.Bucketing
       .ensureMaintainedAssignmentIndex(spark, dir, iters)
     val cents = centroidLiterals(spark, dir, iters)
-    val probes = withProbes(
-      emb(spark, dir).select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm")),
-      cents, nprobe)
-    scoreTopK(spark.table(table), probes, k)
-      .select(col("q_id"), col("rk"), col("vec_id"),
-        round(col("score"), 6).as("cos"))
+    val probes = withProbes(asQueries(emb(spark, dir)), cents, nprobe)
+    presented(scoreTopK(spark.table(table), probes, k))
     // no orderBy here: the caller materializes this through the memo
     // parquet (row order not preserved) and sorts on the read side —
     // an inner sort would range-shuffle the n·k edges for nothing
@@ -587,10 +607,8 @@ object Similarity {
         .ensureMaintainedAssignmentIndex(spark, dir, iters))
       val newIdx = idx.filter(col("vec_id") % mod === 0)
       val e = emb(spark, dir)
-      def q(df: DataFrame) = df.select(col("vec_id").as("q_id"),
-        col("v").as("q_v"), col("nrm").as("q_nrm"))
-      val oldQ = q(e.filter(col("vec_id") % mod =!= 0))
-      val newQ = q(e.filter(col("vec_id") % mod === 0))
+      val oldQ = asQueries(e.filter(col("vec_id") % mod =!= 0))
+      val newQ = asQueries(e.filter(col("vec_id") % mod === 0))
       val cents = centroidLiterals(spark, dir, iters)
       // the pre-batch graph, built once over the old slice only
       val base = knnGraphBase(spark, dir, k, nprobe, iters, mod)
@@ -598,9 +616,7 @@ object Similarity {
         graphReverseMerge(base, newIdx, oldQ, cents, k, nprobe)
       // (i) the batch's own edges, probed against the full index
       val newEdges = scoreTopK(idx, withProbes(newQ, cents, nprobe), k)
-      untouched.unionByName(remerged).unionByName(newEdges)
-        .select(col("q_id"), col("rk"), col("vec_id"),
-          round(col("score"), 6).as("cos"))
+      presented(untouched.unionByName(remerged).unionByName(newEdges))
     }.orderBy("q_id", "rk")
 
   /** The bounded REVERSE half of the graph fold-in, factored so the
@@ -627,13 +643,8 @@ object Similarity {
     // (ii) candidate pairs old-q → new-b, dirty-cell-pruned
     val dirtyCells = batchIdx.select("c_id").distinct()
       .collect().map(_.getLong(0)).sorted // bounded by C
-    val newPairs = batchIdx.join(
-        withProbes(oldQ, cents, nprobe)
-          .filter(col("c_id").isin(dirtyCells.toSeq: _*)), "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm")))
-          .as("score"))
+    val newPairs = exactScores(batchIdx.join(withProbes(oldQ, cents, nprobe)
+      .filter(col("c_id").isin(dirtyCells.toSeq: _*)), "c_id"))
     // per-vector k-th score from the artifact: a full top-k's weakest
     // edge; vectors with fewer than k edges can always absorb more
     val kth = base.groupBy("q_id")
@@ -647,16 +658,10 @@ object Similarity {
       .select("q_id", "vec_id", "score")
     val touched = surviving.select("q_id").distinct()
     val untouched = base.join(touched, Seq("q_id"), "left_anti")
-    val remerged = base.join(touched, "q_id")
+    val remerged = rankTopK(base.join(touched, "q_id")
       .select("q_id", "vec_id", "score")
       .unionByName(surviving)
-      .dropDuplicates("q_id", "vec_id")
-      .groupBy("q_id")
-      .agg(graft.functions.TopK.top_k_by_score(
-        struct(col("score"), col("vec_id")), k).as("nn"))
-      .select(col("q_id"), posexplode(col("nn")).as(Seq("pos", "s")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rk"),
-        col("s.id").as("vec_id"), col("s.score").as("score"))
+      .dropDuplicates("q_id", "vec_id"), k)
     (untouched, remerged)
   }
 
@@ -669,9 +674,7 @@ object Similarity {
       val oldIdx = spark.table(graft.sources.Bucketing
         .ensureMaintainedAssignmentIndex(spark, dir, iters))
         .filter(col("vec_id") % mod =!= 0)
-      val oldQ = emb(spark, dir).filter(col("vec_id") % mod =!= 0)
-        .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-          col("nrm").as("q_nrm"))
+      val oldQ = asQueries(emb(spark, dir).filter(col("vec_id") % mod =!= 0))
       scoreTopK(oldIdx,
         withProbes(oldQ, centroidLiterals(spark, dir, iters), nprobe), k)
     }
@@ -703,14 +706,10 @@ object Similarity {
           graft.sources.Bucketing.ensureChurnedAssignmentIndex(
             spark, dir, iters, mod = mod), Seq("c_id", "vec_id"))
         .select("c_id", "vec_id", "v", "nrm")
-      val affQ = emb(spark, dir)
-        .join(affected.withColumnRenamed("q_id", "vec_id"), "vec_id")
-        .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-          col("nrm").as("q_nrm"))
-      val repaired = scoreTopK(served,
-          withProbes(affQ, centroidLiterals(spark, dir, iters), nprobe), k)
-        .select(col("q_id"), col("rk"), col("vec_id"),
-          round(col("score"), 6).as("cos"))
+      val affQ = asQueries(emb(spark, dir)
+        .join(affected.withColumnRenamed("q_id", "vec_id"), "vec_id"))
+      val repaired = presented(scoreTopK(served,
+          withProbes(affQ, centroidLiterals(spark, dir, iters), nprobe), k))
       untouched.unionByName(repaired)
     }.orderBy("q_id", "rk")
 
@@ -750,7 +749,7 @@ object Similarity {
       nprobe: Int = 8, iters: Int = 2): DataFrame = {
     val table =
       graft.sources.Bucketing.ensureMaintainedAssignmentIndex(spark, dir, iters)
-    probeTopK(spark.table(table), queriesOf(emb(spark, dir)),
+    probeTopK(spark.table(table), standardQueries(spark, dir),
       centroidLiterals(spark, dir, iters), k, nprobe, NumQueries)
   }
 
@@ -832,7 +831,7 @@ object Similarity {
     * other assignment source) can answer the same queries. */
   def servedTopK(spark: SparkSession, dir: String, assigned: DataFrame,
       k: Int = 10, nprobe: Int = 8, iters: Int = 2): DataFrame = {
-    probeTopK(assigned, queriesOf(emb(spark, dir)),
+    probeTopK(assigned, standardQueries(spark, dir),
       centroidLiterals(spark, dir, iters), k, nprobe, NumQueries)
   }
 
@@ -963,12 +962,8 @@ object Similarity {
     // queue (BlockManager KeyLock) plus 32x shuffle-writer setup, so
     // the added parallelism never paid. The serve is floor-bound by
     // the one-time broadcast build at this data size.
-    val batch = emb(spark, dir).filter(col("vec_id") % mod === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"))
-    scoreTopK(corpus, withProbes(batch, cents, nprobe), k)
-      .select(col("q_id"), col("rk"), col("vec_id"),
-        round(col("score"), 6).as("cos"))
+    val batch = asQueries(emb(spark, dir).filter(col("vec_id") % mod === 0))
+    presented(scoreTopK(corpus, withProbes(batch, cents, nprobe), k))
       .orderBy("q_id", "rk")
   }
 
@@ -1013,9 +1008,8 @@ object Similarity {
     * bounded TopK, |qIds|·k output bound). */
   def probedTopKForIds(spark: SparkSession, dir: String, qIds: Seq[Long],
       k: Int = 10, nprobe: Int = 8, iters: Int = 2): DataFrame = {
-    val queries = emb(spark, dir).filter(col("vec_id").isin(qIds: _*))
-      .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"))
+    val queries =
+      asQueries(emb(spark, dir).filter(col("vec_id").isin(qIds: _*)))
     probeTopK(assignmentTable(spark, dir, iters), queries,
       centroidLiterals(spark, dir, iters), k, nprobe, qIds.distinct.size)
   }
@@ -1033,9 +1027,7 @@ object Similarity {
   def semanticScreenFrom(batch: DataFrame, assignment: DataFrame,
       cents: Array[(Long, Seq[Double], Double)], threshold: Double = 0.40,
       nprobe: Int = 8): DataFrame = {
-    val q = batch.select(col("vec_id").as("q_id"), col("v").as("q_v"),
-      col("nrm").as("q_nrm"))
-    val probes = withProbes(q, cents, nprobe)
+    val probes = withProbes(asQueries(batch), cents, nprobe)
     // vec_id != q_id mirrors probeTopK: under at-least-once replay the
     // index already holds the batch's own first-run append, and a
     // vector must not be rejected for matching ITSELF
@@ -1043,7 +1035,7 @@ object Similarity {
       .select(col("c_id"), col("vec_id"), col("v"), col("nrm"))
       .join(probes, "c_id")
       .filter(col("vec_id") =!= col("q_id"))
-      .filter(V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm"))
+      .filter(V.cosine(col("q_v"), col("q_nrm"), col("v"), col("nrm"))
         >= threshold)
       .select(col("q_id").as("vec_id")).distinct()
       .withColumn("rejected", lit(true))
@@ -1085,8 +1077,8 @@ object Similarity {
     * oracle as k unrolled ranked rounds. */
   def mmrRerank(spark: SparkSession, dir: String, poolK: Int = 20,
       k: Int = 8): DataFrame = {
-    val e = emb(spark, dir)
-    mmrGreedy(mmrPool(e.crossJoin(broadcast(queriesOf(e))), poolK), k)
+    mmrGreedy(mmrPool(emb(spark, dir)
+      .crossJoin(broadcast(standardQueries(spark, dir))), poolK), k)
   }
 
   /** Harness query `mmr_rerank_ivf`: the SAME greedy over the
@@ -1098,7 +1090,7 @@ object Similarity {
     * [[mmrRerank]]. */
   def mmrRerankIvf(spark: SparkSession, dir: String, poolK: Int = 20,
       k: Int = 8, nprobe: Int = 8, iters: Int = 2): DataFrame = {
-    val probes = withProbes(queriesOf(emb(spark, dir)),
+    val probes = withProbes(standardQueries(spark, dir),
       centroidLiterals(spark, dir, iters), nprobe)
     mmrGreedy(mmrPool(
       assignmentTable(spark, dir, iters).join(broadcast(probes), "c_id"),
@@ -1114,7 +1106,7 @@ object Similarity {
   private def mmrPool(pairs: DataFrame, poolK: Int): DataFrame =
     rankCut(pairs.filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"), col("v"), col("nrm"),
-          (V.dot(col("q_v"), col("v")) / (col("q_nrm") * col("nrm")))
+          V.cosine(col("q_v"), col("q_nrm"), col("v"), col("nrm"))
             .as("cos")), poolK)
       .select(col("q_id"), col("rk"), col("vec_id"), col("v"), col("nrm"),
         round(col("cos"), 6).as("rel"))
@@ -1181,10 +1173,9 @@ object Similarity {
             best.getField("mmr").as("mmr")))).as("out")))
       },
       acc => acc.getField("out"))
-    cands.select(col("q_id"), explode(folded).as("o"))
+    ranked(cands.select(col("q_id"), explode(folded).as("o"))
       .select(col("q_id"), col("o.rk").as("rk"),
         col("o.vec_id").as("vec_id"), col("o.rel").as("rel"),
-        col("o.mmr").as("mmr"))
-      .orderBy("q_id", "rk")
+        col("o.mmr").as("mmr")), "q_id", NumQueries.toLong * k)
   }
 }

@@ -569,7 +569,8 @@ object Bucketing {
     * probed lists' files, and because c_id is the bucketing column, the
     * per-candidate M-addend ADC aggregation (grouping keys ⊇ c_id)
     * rides the bucketing with NO exchange on the index side — the only
-    * shuffle left in a serve is the bounded per-query top-k window.
+    * shuffle left in a serve is the rank kernel's bounded per-query
+    * TopK buffers.
     * Built once per dataset from the two memoized halves (the IVF
     * assignment × the PQ encode); increments compose the two existing
     * frozen-model appends (assign O(batch·C) + encode O(batch·M·Ksub)),
@@ -592,7 +593,7 @@ object Bucketing {
     * 8 B/vector codes and the raw assignment's 512 B vectors: ~80 B of
     * id+norm+scale+64 int8 codes per row). Same serve mechanics: the
     * probe is a literal bucket-pruning `c_id IN (…)` filter, the only
-    * shuffle is the per-query top-k window. */
+    * shuffle is the rank kernel's bounded per-query TopK buffers. */
   def ensureIvfSq8Index(spark: SparkSession, dir: String,
       iters: Int = 2): String = {
     val table = s"ivfsq8_idx_${iters}_${dirTag(dir)}"

@@ -76,7 +76,7 @@ object StreamingBackfill {
     * or index rebuild anywhere in the loop; this is the ingest cadence
     * the batch [[graft.operators.Dedup.incrementalPairsBucketed]] runs
     * nightly, executed continuously. */
-  def ingestDedupLoop(spark: SparkSession, newDocs: DataFrame,
+  def ingestDedupLoop(newDocs: DataFrame,
       corpusDir: String, indexTable: String, outDir: String,
       threshold: Double = 0.5): Unit = {
     drain(newDocs, "") { (batch, id) =>
@@ -205,7 +205,7 @@ object StreamingBackfill {
     * must use a seq below the first batch id (e.g. -1) so batch rows
     * supersede on key collisions. Doc deletes and updates ride the
     * dedicated [[churnIngestLoop]] (tombstone batches, `op='D'`). */
-  def indexMaintenanceLoop(spark: SparkSession, newDocs: DataFrame,
+  def indexMaintenanceLoop(newDocs: DataFrame,
       indexTable: String): Unit = {
     drain(newDocs, "") { (batch, id) =>
       appendPostingsBatch(batch.sparkSession, indexTable,
@@ -250,7 +250,7 @@ object StreamingBackfill {
     * over the full corpus — StreamingSpec pins both hash-equalities.
     * Every step is O(batch + matching index rows); no full-corpus scan,
     * tokenize, or rebuild anywhere in the loop. */
-  def fullIngestLoop(spark: SparkSession, newDocs: DataFrame,
+  def fullIngestLoop(newDocs: DataFrame,
       corpusDir: String, bandIndexTable: String, postingsIndexTable: String,
       assignIndexTable: String, centroids: DataFrame,
       embedder: DataFrame => DataFrame, outDir: String,
@@ -403,7 +403,7 @@ object StreamingBackfill {
     * idempotence survive the rewrite). Every append and compaction
     * takes its table's bucket count from the catalog, so the loop takes
     * none. */
-  def churnIngestLoop(spark: SparkSession, ops: DataFrame,
+  def churnIngestLoop(ops: DataFrame,
       postingsTable: String, assignTable: String, centroids: DataFrame,
       embedder: DataFrame => DataFrame,
       doclenTable: Option[String] = None,
@@ -443,7 +443,7 @@ object StreamingBackfill {
     * form of the nightly snapshot⊕changelog batch merge — same kernel,
     * same store layout, same reader ([[graft.operators.Cdc
     * .currentSnapshot]]/[[graft.operators.Cdc.lookup]]). */
-  def cdcUpsertLoop(spark: SparkSession, changes: DataFrame,
+  def cdcUpsertLoop(changes: DataFrame,
       storeDir: String, buckets: Int = 16,
       checkpointDir: String = ""): Unit = {
     // resumable: a redelivered batch's stale rows lose latest-wins to
@@ -465,9 +465,7 @@ object StreamingBackfill {
     * complete top-k sets, never a row-level mix of generations. Raw
     * scores round at this edge, like every serve path. */
   def servedGraph(spark: SparkSession, graphDir: String): DataFrame =
-    servedGraphRaw(spark, graphDir)
-      .select(col("q_id"), col("rk"), col("vec_id"),
-        round(col("score"), 6).as("cos"))
+    graft.operators.Similarity.presented(servedGraphRaw(spark, graphDir))
 
   // The graph-store protocol runs on the HADOOP filesystem API (resolved
   // from the path's scheme), never java.io.File: the parquet deltas are
@@ -669,6 +667,32 @@ object StreamingBackfill {
       // max(seq) is then null, and the store's next generation is 0
       .getOrElse(0L)
 
+  /** The graph store's delta commit protocol, shared by
+    * [[graphIngestLoop]] and [[graphChurnLoop]]: the delta lands in
+    * `graphDir/<name>` and commits by its `_done` marker. A marked
+    * delta means a redelivered batch and is skipped (the fold reads
+    * prior state, so the marker, not arithmetic, makes replay
+    * idempotent); an unmarked partial from a crashed attempt is deleted
+    * first. ONE committed-delta listing serves both the served `base`
+    * handed to `rows` and the next monotone seq ([[nextSeqFromDirs]]);
+    * the rows are stamped (seq, wsrc = `name`), written, and only then
+    * marked. */
+  private def commitDelta(s: SparkSession, graphDir: String, name: String)(
+      rows: DataFrame => DataFrame): Unit = {
+    val (fs, _) = graphFs(s, graphDir)
+    val deltaDir = new org.apache.hadoop.fs.Path(s"$graphDir/$name")
+    val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
+    if (!fs.exists(marker)) {
+      if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
+      val dirs = committedDeltas(s, graphDir)
+      rows(servedFromDirs(s, dirs))
+        .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
+        .withColumn("wsrc", lit(name))
+        .write.mode("overwrite").parquet(deltaDir.toString)
+      fs.create(marker, true).close()
+    }
+  }
+
   /** STREAMING kNN-graph maintenance — the E7 twin for the one corpus
     * artifact that still folded in by batch job only
     * ([[graft.operators.Similarity.knnGraphMaintained]]). Per
@@ -686,7 +710,8 @@ object StreamingBackfill {
     *  3. write ONLY touched + new vectors' rows as a batch DELTA under
     *     `graphDir/batch_id=<id>` with a MONOTONE store seq
     *     ([[nextSeqFromDirs]] — never a per-loop seq domain, see its
-    *     note), committed by a `_done` marker — [[servedGraph]] resolves latest-wins per
+    *     note), committed by a `_done` marker ([[commitDelta]]) —
+    *     [[servedGraph]] resolves latest-wins per
     *     q_id, so untouched vectors keep serving from older deltas and
     *     a delta is O(touched + batch), never O(n);
     *  4. append the batch to the churn-schema assignment index — the
@@ -713,7 +738,7 @@ object StreamingBackfill {
     * does). The (seq, wsrc) generation order degrades a violated
     * contract to a deterministic wholesale winner rather than a
     * row-mixed serve, but the loser's work is silently discarded. */
-  def graphIngestLoop(spark: SparkSession, newVecs: DataFrame,
+  def graphIngestLoop(newVecs: DataFrame,
       assignIndexTable: String, centroids: DataFrame, graphDir: String,
       k: Int = 3, nprobe: Int = 4,
       compactEvery: Int = 0, checkpointDir: String = ""): Unit = {
@@ -730,36 +755,19 @@ object StreamingBackfill {
       Memo.withScratch(s, s"graph_bidx_$id")(
           Similarity.assignVectors(vecs, centroids)
             .select("c_id", "vec_id", "v", "nrm")) { batchIdx =>
-        val (fs, _) = graphFs(s, graphDir)
-        val deltaDir = new org.apache.hadoop.fs.Path(
-          s"$graphDir/batch_id=$id")
-        val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
-        if (!fs.exists(marker)) {
-          if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
+        commitDelta(s, graphDir, s"batch_id=$id") { base =>
           s.sql(s"REFRESH TABLE $assignIndexTable")
           val oldIdx = IndexChurn
             .served(s, assignIndexTable, Seq("c_id", "vec_id"))
             .select("c_id", "vec_id", "v", "nrm")
             .join(batchIdx.select("vec_id"), Seq("vec_id"), "left_anti")
-          val oldQ = oldIdx.select(col("vec_id").as("q_id"),
-            col("v").as("q_v"), col("nrm").as("q_nrm"))
-          val newQ = batchIdx.select(col("vec_id").as("q_id"),
-            col("v").as("q_v"), col("nrm").as("q_nrm"))
-          // ONE store listing serves both the fold's base and the next
-          // monotone seq (the seq read is a single-column scan)
-          val dirs = committedDeltas(s, graphDir)
-          val base = servedFromDirs(s, dirs)
           val (_, remerged) = Similarity.graphReverseMerge(
-            base, batchIdx, oldQ, cents, k, nprobe)
+            base, batchIdx, Similarity.asQueries(oldIdx), cents, k, nprobe)
           val newEdges = Similarity.scoreTopK(
             oldIdx.unionByName(batchIdx),
-            Similarity.withProbes(newQ, cents, nprobe), k)
+            Similarity.withProbes(Similarity.asQueries(batchIdx), cents,
+              nprobe), k)
           remerged.unionByName(newEdges)
-            .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
-            .withColumn("wsrc", lit(s"batch_id=$id"))
-            .write.mode("overwrite").parquet(deltaDir.toString)
-          fs.create(marker, true).close()
-          ()
         }
         IndexChurn.append(s, assignIndexTable, batchIdx, "U", id)
       }
@@ -797,8 +805,9 @@ object StreamingBackfill {
     *     against the churned index — the affected set is bounded by
     *     the batch's reverse degree (≤ n_del·k), never the corpus;
     *  3. the delta (repaired rows + sentinels) commits under a `_done`
-    *     marker with a MONOTONE store seq ([[nextSeqFromDirs]] — one past
-    *     the max committed generation, so any later write from EITHER
+    *     marker ([[commitDelta]]) with a MONOTONE store seq
+    *     ([[nextSeqFromDirs]] — one past the max committed
+    *     generation, so any later write from EITHER
     *     loop supersedes; a fixed churn domain would instead doom
     *     every subsequent ingest fold that touches a repaired vector);
     *     the assignment-index tombstones still ride the 2^40 churn
@@ -812,7 +821,7 @@ object StreamingBackfill {
     * Same SINGLE-WRITER-per-graphDir contract as [[graphIngestLoop]]:
     * never run two graph loops (or a loop and [[compactGraph]])
     * concurrently against one store. */
-  def graphChurnLoop(spark: SparkSession, deletes: DataFrame,
+  def graphChurnLoop(deletes: DataFrame,
       assignIndexTable: String, centroids: DataFrame, graphDir: String,
       k: Int = 3, nprobe: Int = 4,
       seqBase: Long = ChurnSeqBase, checkpointDir: String = ""): Unit = {
@@ -833,14 +842,7 @@ object StreamingBackfill {
         // grow side appends at raw batch ids); the GRAPH delta seq
         // is monotone per store — see nextSeqFromDirs
         IndexChurn.append(s, assignIndexTable, delIdx, "D", seqBase + id)
-        val (fs, _) = graphFs(s, graphDir)
-        val deltaDir = new org.apache.hadoop.fs.Path(
-          s"$graphDir/churn_id=$id")
-        val marker = new org.apache.hadoop.fs.Path(deltaDir, "_done")
-        if (!fs.exists(marker)) {
-          if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
-          val dirs = committedDeltas(s, graphDir)
-          val base = servedFromDirs(s, dirs)
+        commitDelta(s, graphDir, s"churn_id=$id") { base =>
           val delQ = delIdx.select(col("vec_id").as("q_id"))
           // deleted as queries: their whole generation must vanish
           val goneQ = base.join(delQ, Seq("q_id"), "left_semi")
@@ -867,19 +869,12 @@ object StreamingBackfill {
           val servedIdx = IndexChurn
             .served(s, assignIndexTable, Seq("c_id", "vec_id"))
             .select("c_id", "vec_id", "v", "nrm")
-          val affQ = servedIdx
+          val affQ = Similarity.asQueries(servedIdx
             .join(affected.withColumnRenamed("q_id", "vec_id"),
-              Seq("vec_id"))
-            .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-              col("nrm").as("q_nrm"))
+              Seq("vec_id")))
           val repaired = Similarity.scoreTopK(servedIdx,
             Similarity.withProbes(affQ, cents, nprobe), k)
           repaired.unionByName(sentinels)
-            .withColumn("seq", lit(nextSeqFromDirs(s, dirs)))
-            .withColumn("wsrc", lit(s"churn_id=$id"))
-            .write.mode("overwrite").parquet(deltaDir.toString)
-          fs.create(marker, true).close()
-          ()
         }
       }
     }

@@ -86,7 +86,7 @@ class CdcSpec extends AnyFunSuite {
     b2.repartition(1).write.mode("append").parquet(dir)
     val changes = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    graft.streaming.StreamingBackfill.cdcUpsertLoop(spark, changes, store, buckets = 4)
+    graft.streaming.StreamingBackfill.cdcUpsertLoop(changes, store, buckets = 4)
 
     def snap() = Cdc.currentSnapshot(spark, store)
       .select("user_id", "last_type", "last_value").collect()
@@ -134,7 +134,7 @@ class CdcSpec extends AnyFunSuite {
     ).foreach(rows => rows
       .toDF("user_id", "ts", "event_id", "op", "last_type", "last_value")
       .repartition(1).write.mode("append").parquet(dir))
-    def run(): Unit = graft.streaming.StreamingBackfill.cdcUpsertLoop(spark,
+    def run(): Unit = graft.streaming.StreamingBackfill.cdcUpsertLoop(
       spark.readStream.schema("user_id BIGINT, ts TIMESTAMP, " +
           "event_id BIGINT, op STRING, last_type STRING, last_value DOUBLE")
         .option("maxFilesPerTrigger", "1").parquet(dir),

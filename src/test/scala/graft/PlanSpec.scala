@@ -110,18 +110,28 @@ class PlanSpec extends AnyFunSuite {
 
   test("bounded index serves end in TakeOrderedAndProject, never a " +
       "range-partitioned sort; the IVF serves rank without a Window") {
-    Seq("bm25_batch", "hybrid_search", "sim_topk_ivf", "sim_topk_ivf_kmeans",
-        "sim_topk_maintained").foreach { q =>
+    // every sim_topk serve but sim_topk_incremental, whose arrival batch
+    // grows with the corpus (no |Q|·k bound), ranks through serveTopK
+    val simTopK = SparkEntry.queries.keys.toSeq.sorted
+      .filter(q => q.startsWith("sim_topk_") && q != "sim_topk_incremental")
+    assert(simTopK.size == 19, simTopK)
+    // the churn serves read IndexChurn's latest-wins serve view, a
+    // Window over the index key; no sim_topk serve ranks in a Window
+    val churnView = Set("sim_topk_churn", "sim_topk_pq_churn")
+    (Seq("bm25_batch", "hybrid_search", "mmr_rerank", "mmr_rerank_ivf") ++
+        simTopK).foreach { q =>
       val p = planOf(q)
       assert(p.contains("TakeOrderedAndProject"), s"$q:\n$p")
       assert(!p.contains("rangepartitioning"), s"$q:\n$p")
+      if (q.startsWith("sim_topk_")) {
+        assert(!p.contains("windowspecdefinition(q_id"), s"$q:\n$p")
+        assert(churnView(q) || !p.contains("Window"), s"$q:\n$p")
+      }
     }
     val ivf = Shim.executedPlan(graft.operators.Similarity.probedTopKForIds(
       spark, sf, Seq(1L, 2L, 3L))).toString
     assert(ivf.contains("TakeOrderedAndProject"), ivf)
     assert(!ivf.contains("rangepartitioning"), ivf)
-    Seq("sim_topk_ivf", "sim_topk_ivf_kmeans", "sim_topk_maintained")
-      .map(planOf).foreach(p => assert(!p.contains("Window"), p))
     assert(!ivf.contains("Window"), ivf)
   }
 

@@ -256,10 +256,11 @@ class PropertySpec extends AnyFunSuite {
   test("cosine is symmetric, in [-1,1], and 1 on self") {
     import spark.implicits._
     forSamples(Gen.zip(vecGen, vecGen), 20) { case (a, b) =>
+      val (na, nb) = (V.norm(col("a")), V.norm(col("b")))
       val r = Seq((a.toArray, b.toArray)).toDF("a", "b").select(
-        V.cosine(col("a"), col("b")).as("ab"),
-        V.cosine(col("b"), col("a")).as("ba"),
-        V.cosine(col("a"), col("a")).as("aa")).collect().head
+        V.cosine(col("a"), na, col("b"), nb).as("ab"),
+        V.cosine(col("b"), nb, col("a"), na).as("ba"),
+        V.cosine(col("a"), na, col("a"), na).as("aa")).collect().head
       assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12)
       assert(r.getDouble(0) >= -1.0 - 1e-9 && r.getDouble(0) <= 1.0 + 1e-9)
       assert(math.abs(r.getDouble(2) - 1.0) < 1e-9)

@@ -56,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(streamDir)
-      StreamingBackfill.ingestDedupLoop(spark, stream, corpusDir, table, outDir)
+      StreamingBackfill.ingestDedupLoop(stream, corpusDir, table, outDir)
       def pairsOf(id: Int): Set[(Long, Long)] =
         spark.read.parquet(s"$outDir/batch_id=$id")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -79,7 +79,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(streamDir)
-      StreamingBackfill.ingestDedupLoop(spark, stream2, corpusDir, table,
+      StreamingBackfill.ingestDedupLoop(stream2, corpusDir, table,
         outDir)
       assert(pairsOf(0) == Set((1000L, 1L), (1010L, 2000L)),
         s"replayed batch 0 report wrong (self-pairs?): ${pairsOf(0)}")
@@ -119,7 +119,7 @@ class StreamingSpec extends AnyFunSuite {
         .repartition(1).write.mode("append").parquet(streamDir)
       val stream = spark.readStream.schema(newDocs.schema)
         .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      StreamingBackfill.indexMaintenanceLoop(spark, stream, table)
+      StreamingBackfill.indexMaintenanceLoop(stream, table)
       // after the loop the SERVED index IS the full corpus postings
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select("token", "doc_id", "tf").collect()
@@ -200,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
         .parquet(streamDir)
       val embedder = (b: org.apache.spark.sql.DataFrame) =>
         emb.join(b.select(col("doc_id").as("vec_id")), "vec_id")
-      StreamingBackfill.churnIngestLoop(spark, stream, postTable,
+      StreamingBackfill.churnIngestLoop(stream, postTable,
         assignTable, centroids, embedder, doclenTable = Some(dlTable))
       // --- postings serve: victim gone, target serves its NEW text
       def servedPosts() = IndexChurn
@@ -322,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
         emb.join(b.select(col("doc_id").as("vec_id")), "vec_id")
       // any tombstone trips the tick: compaction interleaves WITH the
       // batches (b0 compacts before b1 lands), the hard ordering case
-      StreamingBackfill.churnIngestLoop(spark, stream, postTable,
+      StreamingBackfill.churnIngestLoop(stream, postTable,
         assignTable, centroids, embedder, doclenTable = Some(dlTable),
         compactThreshold = 1e-9)
       // debt is gone from every table the instant the stream drains —
@@ -466,7 +466,7 @@ class StreamingSpec extends AnyFunSuite {
           "graft-memo-(full_(bands|cand|vecs)|graph_(bidx|del))_\\d+-.*"))
         .map(_.getName).toSet
       val preScratch = scratchDirs()
-      StreamingBackfill.fullIngestLoop(spark, stream, corpusDir, bandTable,
+      StreamingBackfill.fullIngestLoop(stream, corpusDir, bandTable,
         postTable, assignTable, centroids,
         b => emb.join(b.select(col("doc_id").as("vec_id")), "vec_id"), outDir)
       // --- the corpus store accreted every streamed doc, and each batch
@@ -543,7 +543,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(streamDir)
-      StreamingBackfill.fullIngestLoop(spark, stream2, corpusDir, bandTable,
+      StreamingBackfill.fullIngestLoop(stream2, corpusDir, bandTable,
         postTable, assignTable, centroids,
         b => emb.join(b.select(col("doc_id").as("vec_id")), "vec_id"), outDir)
       assert(StreamingBackfill.corpusDocs(spark, corpusDir).count() === corpusN,
@@ -611,7 +611,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(streamDir)
-      StreamingBackfill.graphIngestLoop(spark, mkStream(), assignTable,
+      StreamingBackfill.graphIngestLoop(mkStream(), assignTable,
         centroids, graphDir)
       def servedRows() = StreamingBackfill.servedGraph(spark, graphDir)
         .collect().map(_.toString).sorted.toSeq
@@ -631,7 +631,7 @@ class StreamingSpec extends AnyFunSuite {
       // whole-stream replay (fresh query, batch ids restart at 0): the
       // markers skip every fold, the assignment re-appends collapse in
       // the latest-wins serve — nothing changes, nothing doubles
-      StreamingBackfill.graphIngestLoop(spark, mkStream(), assignTable,
+      StreamingBackfill.graphIngestLoop(mkStream(), assignTable,
         centroids, graphDir)
       assert(servedRows() === got, "replay changed the served graph")
       assert(IndexChurn.served(spark, assignTable, Seq("c_id", "vec_id"))
@@ -663,7 +663,7 @@ class StreamingSpec extends AnyFunSuite {
       val embRaw = Tables.load(spark, sf, "embeddings")
       // one ingest wave covering the whole corpus
       embRaw.coalesce(1).write.mode("overwrite").parquet(s"$streamDir/all")
-      StreamingBackfill.graphIngestLoop(spark,
+      StreamingBackfill.graphIngestLoop(
         spark.readStream.schema(embRaw.schema)
           .option("maxFilesPerTrigger", "1")
           .option("recursiveFileLookup", "true").parquet(streamDir),
@@ -676,7 +676,7 @@ class StreamingSpec extends AnyFunSuite {
           .filter(_.getName.endsWith(".parquet"))
           .foreach(f => assert(f.setLastModified(1000000000000L + r * 6000L)))
       }
-      StreamingBackfill.graphChurnLoop(spark,
+      StreamingBackfill.graphChurnLoop(
         spark.readStream.schema(embRaw.schema)
           .option("maxFilesPerTrigger", "1")
           .option("recursiveFileLookup", "true").parquet(delDir),
@@ -770,7 +770,7 @@ class StreamingSpec extends AnyFunSuite {
           .filter(_.getName.endsWith(".parquet"))
           .foreach(f => assert(f.setLastModified(1000000000000L + w * 60000L)))
       }
-      StreamingBackfill.graphIngestLoop(spark,
+      StreamingBackfill.graphIngestLoop(
         spark.readStream.schema(embRaw.schema)
           .option("maxFilesPerTrigger", "1")
           .option("recursiveFileLookup", "true").parquet(streamDir),
@@ -825,12 +825,12 @@ class StreamingSpec extends AnyFunSuite {
         1000000000000L)
       wave(streamDir, "b1", embRaw.filter(col("vec_id") % 3 === 1),
         1000000060000L)
-      run(st => StreamingBackfill.graphIngestLoop(spark, st, assignTable,
+      run(st => StreamingBackfill.graphIngestLoop(st, assignTable,
         centroids, graphDir), streamDir)
       // churn deletes the %5 == 0 members of what has arrived
       wave(delDir, "d0", embRaw.filter(col("vec_id") % 3 =!= 2 &&
         col("vec_id") % 5 === 0), 1000000120000L)
-      run(st => StreamingBackfill.graphChurnLoop(spark, st, assignTable,
+      run(st => StreamingBackfill.graphChurnLoop(st, assignTable,
         centroids, graphDir), delDir)
       // wave C arrives AFTER the churn: restart the (uncheckpointed)
       // ingest stream over the same dir — waves A/B skip on their
@@ -839,7 +839,7 @@ class StreamingSpec extends AnyFunSuite {
       // would lose the latest-wins race and C's edges would vanish
       wave(streamDir, "b2", embRaw.filter(col("vec_id") % 3 === 2),
         1000000180000L)
-      run(st => StreamingBackfill.graphIngestLoop(spark, st, assignTable,
+      run(st => StreamingBackfill.graphIngestLoop(st, assignTable,
         centroids, graphDir), streamDir)
       // expected: a fresh batch build over exactly the final vector set
       val e = Similarity.embeddingsWithNorm(spark, sf)
@@ -916,7 +916,7 @@ class StreamingSpec extends AnyFunSuite {
         .saveAsTable(assignTable)
       val embRaw = Tables.load(spark, sf, "embeddings")
       embRaw.coalesce(1).write.mode("overwrite").parquet(s"$streamDir/all")
-      StreamingBackfill.graphIngestLoop(spark,
+      StreamingBackfill.graphIngestLoop(
         spark.readStream.schema(embRaw.schema)
           .option("maxFilesPerTrigger", "1")
           .option("recursiveFileLookup", "true").parquet(streamDir),
@@ -943,7 +943,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(preA > 0, "fixture gave survivor A no pre-churn edges")
       embRaw.join(delIds, Seq("vec_id"), "left_semi")
         .coalesce(1).write.mode("overwrite").parquet(s"$delDir/d0")
-      StreamingBackfill.graphChurnLoop(spark,
+      StreamingBackfill.graphChurnLoop(
         spark.readStream.schema(embRaw.schema)
           .option("maxFilesPerTrigger", "1")
           .option("recursiveFileLookup", "true").parquet(delDir),

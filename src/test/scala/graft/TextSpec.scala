@@ -652,6 +652,8 @@ class TextSpec extends AnyFunSuite {
   test("empty query lists return zero rows with the serves' normal schema") {
     val R = graft.operators.Retrieval
     val S = graft.operators.Similarity
+    val Q = graft.operators.Quantize
+    val sf = TestSpark.sf
     // the at-ingest screen over an empty arrival batch
     def screen(batch: DataFrame => DataFrame) = S.semanticScreenFrom(
       batch(S.embeddingsWithNorm(spark, TestSpark.sf)),
@@ -662,7 +664,14 @@ class TextSpec extends AnyFunSuite {
       R.bm25Batch(spark, TestSpark.sf, Seq()) -> R.bm25Batch(spark, TestSpark.sf),
       S.probedTopKForIds(spark, TestSpark.sf, Seq()) ->
         S.probedTopKForIds(spark, TestSpark.sf, Seq(1L)),
-      screen(_.limit(0)) -> screen(identity)
+      screen(_.limit(0)) -> screen(identity),
+      // k = 0: the rank kernel returns no row (TopK itself requires k > 0)
+      S.probedTopKForIds(spark, sf, Seq(1L), k = 0) ->
+        S.probedTopKForIds(spark, sf, Seq(1L)),
+      S.bruteForceTopK(spark, sf, k = 0) -> S.bruteForceTopK(spark, sf),
+      Q.pqTopK(spark, sf, k = 0) -> Q.pqTopK(spark, sf),
+      Q.int8TopK(spark, sf, k = 0) -> Q.int8TopK(spark, sf),
+      Q.pqIvfTopK(spark, sf, k = 0) -> Q.pqIvfTopK(spark, sf)
     ).foreach { case (empty, normal) =>
       assert(empty.schema === normal.schema)
       assert(empty.collect().isEmpty)

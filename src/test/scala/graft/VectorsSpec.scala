@@ -27,7 +27,8 @@ class VectorsSpec extends AnyFunSuite {
     val df = Seq(
       (Array(1.0, 2.0), Array(1.0, 2.0)),
       (Array(1.0, 0.0), Array(0.0, 1.0))).toDF("a", "b")
-    val rows = df.select(V.cosine(col("a"), col("b")).as("c")).collect()
+    val rows = df.select(V.cosine(col("a"), V.norm(col("a")),
+      col("b"), V.norm(col("b"))).as("c")).collect()
     assert(math.abs(rows(0).getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(rows(1).getDouble(0)) < 1e-12)
   }

@@ -67,9 +67,6 @@ ALLOW = {
               "pass to opqTopKWith"),
     "Shim.optimized": (
         "ii", "spec seam: AsOfSpec reads the optimized plan through it"),
-    "Vectors.cosine": (
-        "ii", "VectorsSpec and PropertySpec state the cosine range and "
-              "symmetry on it; no serve calls it (a deletion candidate)"),
 }
 
 
