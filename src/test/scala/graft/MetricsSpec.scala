@@ -42,13 +42,34 @@ class MetricsSpec extends AnyFunSuite {
     assert(ma.jobs == 3 && ma.failedJobs == 0, ma.render)
   }
 
-  test("warm ANN serves: job counts of every sim_topk serve, the MMR " +
-      "reranks and the at-ingest screen") {
-    // every bounded serve ranks through Similarity.serveTopK (no
-    // range-partition sampling job); sim_topk_incremental keeps its
-    // global sort. The pinned counts are the second (warm) run's: the
-    // first builds the memos, catalog indexes and codebook artifacts
-    val want = Seq(
+  // every bounded serve ranks through Similarity.serveTopK (no
+  // range-partition sampling job); sim_topk_incremental keeps its global
+  // sort. The pinned counts are the second (warm) run's: the first builds
+  // the memos, catalog indexes and codebook artifacts
+  private def warmJobs(want: Seq[(String, Long)]): Unit = {
+    val got = want.map { case (q, _) =>
+      def run() = SparkEntry.queries(q)(spark, sf).collect()
+      run()
+      val (rows, m) = RunMetrics.instrument(spark)(run())
+      assert(rows.nonEmpty && m.failedJobs == 0, s"$q: ${m.render}")
+      q -> m.jobs
+    }
+    assert(got === want)
+  }
+
+  test("warm probed ANN serves: job counts of the withProbes family") {
+    // each serve picks its probes by a narrow map over the memoized
+    // codebook literal (withProbes)
+    warmJobs(Seq(
+      "sim_topk_ivfpq" -> 7L,
+      "sim_topk_ivfpq_res" -> 7L,
+      "sim_topk_int8_ivf" -> 5L,
+      "mmr_rerank_ivf" -> 8L,
+      "semantic_dedup_incremental" -> 8L))
+  }
+
+  test("warm ANN serves: job counts of the other sim_topk serves and MMR") {
+    warmJobs(Seq(
       "sim_topk_brute" -> 3L,
       "sim_topk_ivf" -> 3L,
       "sim_topk_ivf_kmeans" -> 3L,
@@ -61,25 +82,12 @@ class MetricsSpec extends AnyFunSuite {
       "sim_topk_pq_maintained" -> 5L,
       "sim_topk_pq_packed" -> 6L,
       "sim_topk_pq_churn" -> 5L,
-      "sim_topk_ivfpq" -> 7L,
       "sim_topk_ivfpq_rerank" -> 10L,
-      "sim_topk_ivfpq_res" -> 7L,
       "sim_topk_opq" -> 6L,
       "sim_topk_opq_rerank" -> 9L,
       "sim_topk_int8" -> 3L,
-      "sim_topk_int8_ivf" -> 5L,
       "sim_topk_int8_rerank" -> 6L,
-      "mmr_rerank" -> 8L,
-      "mmr_rerank_ivf" -> 8L,
-      "semantic_dedup_incremental" -> 8L)
-    val got = want.map { case (q, _) =>
-      def run() = SparkEntry.queries(q)(spark, sf).collect()
-      run()
-      val (rows, m) = RunMetrics.instrument(spark)(run())
-      assert(rows.nonEmpty && m.failedJobs == 0, s"$q: ${m.render}")
-      q -> m.jobs
-    }
-    assert(got === want)
+      "mmr_rerank" -> 8L))
   }
 
   test("windowed two-entity Derby backfill write runs one task per entity") {
